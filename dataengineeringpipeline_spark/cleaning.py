@@ -4,7 +4,7 @@ Re-expresses the reference Glue cleaning jobs
 (``terraform/modules/glue/templates/bronze_to_silver_{orders,customers,products}.py``)
 over the testdata star schema: casts with null defaults, string
 standardization, derived date parts, threshold bucketing, validity flags,
-struct building, surrogate keys, and audit columns (SURVEY.md §2.2, §2.8).
+and struct building (SURVEY.md §2.2, §2.8).
 
 Determinism: the reference pins ``EXECUTION_DATE`` once per run
 (``bronze_to_silver_orders.py:52-53``); we make it an explicit ``as_of``
@@ -13,16 +13,12 @@ argument so recency metrics are reproducible and oracle-checkable.
 Scale notes (SURVEY.md §4.2):
 
 - every transform here is a narrow projection — no shuffle, stays inside
-  one WholeStageCodegen span over the Parquet scan;
-- surrogate keys use ``monotonically_increasing_id`` style by default; the
-  reference's unpartitioned ``row_number().over(Window.orderBy(...))``
-  (``bronze_to_silver_orders.py:210-214``) funnels every row through one
-  task and is kept only behind ``dense=True`` for oracle-exact output.
+  one WholeStageCodegen span over the Parquet scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataengineeringpipeline_spark.functions import (
@@ -41,28 +37,6 @@ VALID_ORDER_STATUSES = ["O", "F", "P"]
 
 ACCTBAL_EDGES = [0.0, 2500.0, 7500.0]
 ACCTBAL_LABELS = ["NEGATIVE", "LOW", "MEDIUM", "HIGH"]
-
-
-def with_audit_columns(df: DataFrame, source_system: str) -> Column:
-    """Audit columns the reference adds on every extract/clean
-    (``lambda/snowflake_extractor/lambda_function.py:282-289``)."""
-    return df.withColumn("source_system", F.lit(source_system)).withColumn(
-        "processing_timestamp", F.current_timestamp()
-    )
-
-
-def add_surrogate_key(df: DataFrame, name: str, order_cols: list[str], dense: bool = False) -> DataFrame:
-    """Surrogate key (SURVEY.md §2.5 W1).
-
-    ``dense=False`` (default, scale path): ``monotonically_increasing_id``
-    — no shuffle, unique but not consecutive.
-    ``dense=True`` (oracle-exact path): global ``row_number`` — single-task
-    sort; only for small/silver dimension tables or tests.
-    """
-    if dense:
-        w = Window.orderBy(*[F.col(c) for c in order_cols])
-        return df.withColumn(name, F.row_number().over(w))
-    return df.withColumn(name, F.monotonically_increasing_id())
 
 
 def clean_orders(orders: DataFrame, as_of: str = AS_OF_DATE) -> DataFrame:

@@ -96,14 +96,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load testdata tables and register them as temp views for spark.sql."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 class ConcurrentWriteError(RuntimeError):
     """A second writer attempted a mutation while another held the
     table's writer lock. The mutation was NOT started — retry after the

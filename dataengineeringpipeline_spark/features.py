@@ -121,25 +121,3 @@ def ml_customer_features(silver_orders: DataFrame) -> DataFrame:
         .withColumn("split_bucket", bucket)
         .withColumn("data_split", label)
     )
-
-
-def assemble_feature_vector(features: DataFrame, cols: list[str] | None = None):
-    """Optional pyspark.ml vectorization + standardization for training
-    (parity with VectorAssembler/StandardScaler usage,
-    ``silver_to_gold_ml_features.py:24-25``, ``sagemaker/training/train.py:89-104``)."""
-    from pyspark.ml.feature import StandardScaler, VectorAssembler
-
-    cols = cols or [
-        "total_orders",
-        "lifetime_value",
-        "avg_order_value",
-        "recency_days",
-        "tenure_days",
-        "weekend_orders",
-        "max_quarter_orders",
-    ]
-    assembled = VectorAssembler(inputCols=cols, outputCol="features", handleInvalid="keep").transform(
-        features
-    )
-    scaler = StandardScaler(inputCol="features", outputCol="features_scaled", withMean=True, withStd=True)
-    return scaler.fit(assembled).transform(assembled)

@@ -92,17 +92,6 @@ def std_string(col: str | Column, case: str = "upper") -> Column:
     return F.upper(c) if case == "upper" else F.lower(c)
 
 
-def collapse_whitespace(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.trim(c), r"\s+", " ")
-
-
-def digits_only(col: str | Column, keep: str = "") -> Column:
-    """Strip non-digit characters (phone / zip normalization)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, f"[^0-9{keep}]", "")
-
-
 def bucketize(col: str | Column, edges: list[float], labels: list[str]) -> Column:
     """Threshold when-chain bucketing: ``len(labels) == len(edges) + 1``.
 
@@ -116,21 +105,6 @@ def bucketize(col: str | Column, edges: list[float], labels: list[str]) -> Colum
     for lo_idx in range(1, len(edges)):
         expr = expr.when(c < edges[lo_idx], labels[lo_idx])
     return expr.when(c.isNotNull(), labels[-1])
-
-
-def bucketize_sql(col: str, edges: list[float], labels: list[str]) -> str:
-    """ANSI-SQL CASE WHEN equivalent of :func:`bucketize` (for oracles)."""
-    parts = [f"WHEN {col} < {edges[0]} THEN '{labels[0]}'"]
-    for i in range(1, len(edges)):
-        parts.append(f"WHEN {col} < {edges[i]} THEN '{labels[i]}'")
-    parts.append(f"WHEN {col} IS NOT NULL THEN '{labels[-1]}'")
-    return "CASE " + " ".join(parts) + " END"
-
-
-def null_defaulted_cast(col: str | Column, dtype: str, default) -> Column:
-    """``when(isNull, default).otherwise(cast)`` null-handling projection."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNull(), F.lit(default).cast(dtype)).otherwise(c.cast(dtype))
 
 
 def flag(cond: Column) -> Column:

@@ -231,24 +231,6 @@ def _bigram_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def bigram_counts(docs: DataFrame):
-    """(unigram counts, bigram counts) over the corpus — the statistics
-    tables of the count-based language model. Both are vocabulary-sized
-    (≪ corpus) and broadcastable; one explode-shuffle each to build,
-    exactly the inverted-index economics of the search module."""
-    uni = (
-        docs.select(F.explode(words_col()).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c1"))
-    )
-    bi = (
-        _bigram_pairs(docs)
-        .groupBy("w", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("c2"))
-    )
-    return uni, bi
-
-
 def _fluency_scored(docs: DataFrame) -> DataFrame:
     """(doc_id, source, n_bigrams, fluency_sum, fluency_pm) for every
     document with ≥1 bigram — the aggregation kernel both

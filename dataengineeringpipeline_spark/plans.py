@@ -35,16 +35,6 @@ def formatted_plan(df: DataFrame | str) -> str:
     return buf.getvalue()
 
 
-def exchange_count(df: DataFrame | str) -> int:
-    """Number of Exchange (shuffle or broadcast-build) operators in the
-    physical plan. Broadcast exchanges move dimension-sized data; use
-    :func:`shuffle_count` for the corpus-moving subset."""
-    plan = formatted_plan(df)
-    # formatted mode names each operator in a numbered section header:
-    # "(10) Exchange" / "(5) BroadcastExchange"
-    return len(re.findall(r"^\(\d+\) (?:Exchange|BroadcastExchange)\b", plan, re.M))
-
-
 def shuffle_count(df: DataFrame | str) -> int:
     """Number of plain (non-broadcast) Exchange operators — the ones
     that move row-count-proportional data across the cluster. This is
@@ -58,10 +48,6 @@ def broadcast_join_count(df: DataFrame | str) -> int:
     return len(
         re.findall(r"^\(\d+\) Broadcast(?:Hash|NestedLoop)Join\b", plan, re.M)
     )
-
-
-def has_sort_merge_join(df: DataFrame | str) -> bool:
-    return "SortMergeJoin" in formatted_plan(df)
 
 
 def pushed_filters(df: DataFrame | str) -> list[str]:

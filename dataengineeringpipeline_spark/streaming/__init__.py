@@ -8,18 +8,28 @@ micro-batches, the commit protocol replaces the reference's
 ``_SUCCESS``/``.tmp`` skip-list (``crawler_trigger.py:226-246``), and a
 checkpoint replaces its at-most-one-concurrent crawler dedup.
 
-Three tiers here:
+One lifecycle runs every exactly-once stream here: an ``availableNow``
+file-source drain with a checkpoint and a ``foreachBatch`` writer.
 
-- :func:`stream_events` — file-source stream over the events table with
-  the same integer-µs event-time derivation as the batch loader (no
-  timezone dependence);
-- :func:`hourly_stream_counts` — tumbling-window rollup, the streaming
-  twin of ``events_analytics.hourly_event_summary``; with
-  ``trigger(availableNow=True)`` it drains the backlog as micro-batches
-  and terminates — the reference's scheduled-batch semantics, exactly;
-- :func:`sessionize_stream` — custom stateful operator via
-  ``applyInPandasWithState`` (per-user session assignment with idle
-  timeout), the escape hatch for semantics windowed aggs can't express.
+- :func:`_file_stream` is the reader (optionally bounded by
+  ``maxFilesPerTrigger``) and :func:`_drain` the writer: ``foreachBatch``,
+  checkpoint, ``availableNow``, then wait. The query is stopped and
+  deregistered on success, when a batch raises and on timeout alike
+  (:func:`_await_drained`, which :func:`run_available_now` shares for its
+  memory sink).
+- :func:`_bootstrap` sets up every contract query that streams staged
+  arrival files: a fresh temp root, the arrivals staged in ``in/`` while
+  the seed state is built beside them. Every temp root is registered
+  with ``cache.release_caches``, which removes it once the result has
+  been consumed.
+
+On top of that lifecycle sit the stream shapes: :func:`stream_events`
+(file source over the events table with the batch loader's integer-µs
+event time), windowed and stream-static rollups
+(:func:`hourly_stream_counts`), a stream-stream join, custom state via
+``applyInPandasWithState`` (:func:`sessionize_stream`), and the
+``stream_*`` writers whose per-batch partitions or lake ledgers make a
+crash replay idempotent.
 
 Scale notes: streaming aggregation state lives in the state store keyed
 by window/user — partitioned by the grouping key across executors; the
@@ -33,10 +43,13 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..cache import tracked_mkdtemp
 
 
 #: Events schema template; ``{ts}`` is filled with the type the parquet
@@ -153,6 +166,62 @@ def hourly_stream_counts(events: DataFrame, watermark_delay: str = "1 hour") -> 
     )
 
 
+# -- the one drain lifecycle ---------------------------------------------------
+
+
+def _file_stream(
+    spark: SparkSession, ddl: str, source_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """Parquet file-source stream over ``source_dir``. A stream source
+    cannot infer its schema, hence ``ddl``; ``max_files_per_trigger``
+    bounds each micro-batch on a backlog (``None``: one batch takes
+    every pending file)."""
+    reader = spark.readStream.schema(ddl)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(source_dir)
+
+
+def _drain(raw: DataFrame, write_batch, checkpoint_dir: str, what: str, timeout_s: float) -> None:
+    """Drain ``raw``'s backlog through ``write_batch`` and return: the
+    ``foreachBatch`` + checkpoint + ``availableNow`` lifecycle every
+    exactly-once stream in this module runs. The checkpoint makes a
+    re-run incremental; ``write_batch`` gets batch ids that are stable
+    across replays, which is what each writer's idempotence rests on."""
+    query = (
+        raw.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(raw.sparkSession, query, what, timeout_s)
+
+
+def _await_drained(spark: SparkSession, query, what: str, timeout_s: float) -> None:
+    """Wait for an ``availableNow`` query to finish, then stop it and wait
+    for it to leave the active registry — on success, when a batch
+    raises (the error propagates) and on timeout (``TimeoutError``)
+    alike, so no query outlives its call."""
+    try:
+        finished = query.awaitTermination(timeout_s)
+    finally:
+        query.stop()
+        _await_deregistration(spark, query)
+    if not finished:
+        raise TimeoutError(f"{what} did not finish within {timeout_s}s")
+
+
+def _await_deregistration(spark: SparkSession, query, timeout_s: float = 30.0) -> None:
+    """Wait until a stopped query leaves the active registry — starting a
+    new query on the same checkpoint before then fails with
+    'Multiple streaming queries are concurrently using <path>'."""
+    deadline = time.monotonic() + timeout_s
+    while any(q.id == query.id for q in spark.streams.active):
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"query {query.id} did not deregister within {timeout_s}s")
+        time.sleep(0.05)
+
+
 def run_available_now(
     sdf: DataFrame,
     name: str,
@@ -190,16 +259,10 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        finished = query.awaitTermination(timeout_s)
-        query.stop()
+        _await_drained(spark, query, f"streaming query {name!r}", timeout_s)
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"streaming query {name!r} did not drain its backlog within {timeout_s}s"
-        )
 
 
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,18 +352,8 @@ def stream_etl(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         transform(batch_df).write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
-    raw = spark.readStream.schema(schema_ddl).parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_etl over {source_dir!r} did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir)
+    _drain(raw, write_batch, checkpoint_dir, "stream_etl", timeout_s)
 
 
 def incremental_gold(
@@ -387,18 +440,8 @@ def incremental_gold(
             .parquet(gold_dir)
         )
 
-    raw = spark.readStream.schema(schema_ddl).parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"incremental_gold over {source_dir!r} did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir)
+    _drain(raw, upsert, checkpoint_dir, "incremental_gold", timeout_s)
 
 
 def purchase_click_join_stream(
@@ -549,21 +592,8 @@ def stream_cms_sketch(
             f"{sketch_dir}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:  # bound batch size on backlogs
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_cms_sketch over {source_dir!r} did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_cms_sketch", timeout_s)
 
 
 def read_cms_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
@@ -604,21 +634,8 @@ def stream_hll_sketch(
             f"{sketch_dir}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:  # bound batch size on backlogs
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_hll_sketch over {source_dir!r} did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_hll_sketch", timeout_s)
 
 
 def read_hll_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
@@ -662,19 +679,7 @@ def stream_quantile_sketch(
             "overwrite"
         ).parquet(f"{sketch_dir}/batch_id={batch_id}")
 
-    query = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(sdf.sparkSession, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_quantile_sketch did not finish within {timeout_s}s"
-        )
+    _drain(sdf, write_batch, checkpoint_dir, "stream_quantile_sketch", timeout_s)
 
 
 def read_quantile_sketch(
@@ -695,14 +700,12 @@ def streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     p50/p90/p99 off the merged bins. Because bin-count merge is exact,
     the drained sketch is bit-identical to the batch sketch over the
     same rows — the oracle is the batch arithmetic."""
-    import tempfile
-
     from ..scale import quantile_sketch_estimates
 
     ev = stream_events(spark, sf_dir).select(
         "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_qsk_")
+    tmp = tracked_mkdtemp("stream_qsk_")
     stream_quantile_sketch(
         ev, "cents", f"{tmp}/sketch", f"{tmp}/ckpt", ("event_type",)
     )
@@ -712,17 +715,6 @@ def streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "p", "n", F.col("est").alias("est_cents"))
         .orderBy("event_type", "p")
     )
-
-
-def _await_deregistration(spark: SparkSession, query, timeout_s: float = 30.0) -> None:
-    """Wait until a stopped query leaves the active registry — starting a
-    new query on the same checkpoint before then fails with
-    'Multiple streaming queries are concurrently using <path>'."""
-    deadline = time.monotonic() + timeout_s
-    while any(q.id == query.id for q in spark.streams.active):
-        if time.monotonic() > deadline:
-            raise TimeoutError(f"query {query.id} did not deregister within {timeout_s}s")
-        time.sleep(0.05)
 
 
 def sessionize_stream(
@@ -1239,23 +1231,8 @@ def stream_incremental_dedup(
             f"{state_dir}/decisions/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(DOCUMENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_incremental_dedup over {source_dir!r} did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, DOCUMENTS_DDL, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_incremental_dedup", timeout_s)
 
 
 def stream_incremental_dedup_ordered(
@@ -1345,21 +1322,8 @@ def stream_incremental_dedup_ordered(
             f"{state_dir}/decisions/batch_id={batch_id}"
         )
 
-    raw = spark.readStream.schema(DOCUMENTS_DDL).parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_incremental_dedup_ordered over {source_dir!r}"
-            f" did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, DOCUMENTS_DDL, source_dir)
+    _drain(raw, write_batch, checkpoint_dir, "stream_incremental_dedup_ordered", timeout_s)
 
 
 def read_stream_dedup_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1381,7 +1345,6 @@ def _stage_arrival_batches(df: DataFrame, batch_col, src: str, n_batches: int) -
     the streaming contract-query harnesses; row order inside a staged
     file is irrelevant (every consumer re-derives its own order)."""
     import glob
-    import os
     import shutil
     import tempfile
 
@@ -1406,6 +1369,25 @@ def _stage_arrival_batches(df: DataFrame, batch_col, src: str, n_batches: int) -
     shutil.rmtree(stage, ignore_errors=True)
 
 
+def _bootstrap(prefix: str, build, stage_df: DataFrame, batch_col, n_batches: int = 3) -> str:
+    """Per-invocation bootstrap of a streaming contract query: a fresh
+    temp root (removed by ``cache.release_caches``) whose ``in/`` holds
+    ``stage_df`` staged as ``n_batches`` arrival files, while
+    ``build(root)`` (when given) writes the seed state beside it. The two
+    touch disjoint outputs, so they overlap and the staging write hides
+    inside the seed build. Nothing is memoized across invocations: every
+    run pays its own bootstrap. Returns the root."""
+    root = tracked_mkdtemp(prefix)
+    src = os.path.join(root, "in")
+    os.makedirs(src)
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        jobs = [ex.submit(build, root)] if build is not None else []
+        jobs.append(ex.submit(_stage_arrival_batches, stage_df, batch_col, src, n_batches))
+        for job in jobs:
+            job.result()
+    return root
+
+
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query: seed the dedup state with 80% of the corpus
     (``doc_id % 5 != 0``), stream the remaining 20% in three
@@ -1423,43 +1405,17 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the one-physical-batch-per-arrival general operator
     (``tests/test_streaming.py`` proves the equivalence).
     """
-    import os
-    import tempfile
-
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-    def _bootstrap() -> str:
-        boot = tempfile.mkdtemp(prefix="stream_dedup_boot_")
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-        # Seeding the state and staging the arrival files are independent
-        # (disjoint outputs, disjoint doc slices) — overlap them so the
-        # staging write hides inside the seed's shingle-hash pass.
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            seed = ex.submit(
-                materialize_stream_dedup_state,
-                docs.filter(F.col("doc_id") % 5 != 0),
-                f"{boot}/state",
-            )
-            stage = ex.submit(
-                _stage_arrival_batches,
-                docs.filter(F.col("doc_id") % 5 == 0),
-                F.expr("(doc_id div 5) % 3"),
-                src_dir,
-                3,
-            )
-            seed.result()
-            stage.result()
-        return boot
-
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
-    src = os.path.join(tmp, "in")
+    tmp = _bootstrap(
+        "stream_dedup_boot_",
+        lambda root: materialize_stream_dedup_state(
+            docs.filter(F.col("doc_id") % 5 != 0), f"{root}/state"
+        ),
+        docs.filter(F.col("doc_id") % 5 == 0),
+        F.expr("(doc_id div 5) % 3"),
+    )
     stream_incremental_dedup_ordered(
-        spark, src, f"{tmp}/state", f"{tmp}/ckpt", "(doc_id div 5) % 3"
+        spark, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt", "(doc_id div 5) % 3"
     )
     return read_stream_dedup_decisions(spark, f"{tmp}/state").orderBy("doc_id")
 
@@ -1499,23 +1455,8 @@ def stream_search_index(
             F.countDistinct("doc_id").cast("long").alias("n_docs")
         ).write.mode("overwrite").parquet(f"{state_dir}/meta/batch_id={batch_id}")
 
-    reader = spark.readStream.schema(DOCUMENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_search_index over {source_dir!r} did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, DOCUMENTS_DDL, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_search_index", timeout_s)
 
 
 def read_stream_search_index(spark: SparkSession, state_dir: str):
@@ -1547,19 +1488,13 @@ def streaming_search_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataF
     the result is EXACTLY the batch ``lexical_search_topk`` — the
     oracle is the same SQL.
     """
-    import os
-    import tempfile
-
     from pyspark.sql import Window
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    tmp = tempfile.mkdtemp(prefix="stream_search_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(
-        docs.filter(F.col("doc_id") % 100 != 0), F.expr("doc_id % 3"), src, 3
+    tmp = _bootstrap(
+        "stream_search_", None, docs.filter(F.col("doc_id") % 100 != 0), F.expr("doc_id % 3")
     )
-    stream_search_index(spark, src, f"{tmp}/state", f"{tmp}/ckpt")
+    stream_search_index(spark, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt")
 
     from ..operators.search import posting_lists
 
@@ -1649,23 +1584,8 @@ def stream_quality_gate(
             scored.unpersist()
             spreaded.unpersist()
 
-    reader = spark.readStream.schema(DOCUMENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_quality_gate over {source_dir!r} did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, DOCUMENTS_DDL, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_quality_gate", timeout_s)
 
 
 def read_stream_gate_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1683,15 +1603,9 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch split is a function of doc_id, so the SQL oracle
     reproduces it exactly; the keep decision is the integer classifier
     gate — no floats anywhere in the routed decision."""
-    import os
-    import tempfile
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    tmp = tempfile.mkdtemp(prefix="stream_gate_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(docs, F.expr("doc_id % 3"), src, 3)
-    stream_quality_gate(spark, src, f"{tmp}/state", f"{tmp}/ckpt")
+    tmp = _bootstrap("stream_gate_", None, docs, F.expr("doc_id % 3"))
+    stream_quality_gate(spark, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt")
     dec = read_stream_gate_decisions(spark, f"{tmp}/state")
     return (
         dec.groupBy(
@@ -1759,23 +1673,8 @@ def stream_ann_index(
             f"{table_path}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(EMBEDDINGS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_ann_index over {source_dir!r} did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, EMBEDDINGS_DDL, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_ann_index", timeout_s)
 
 
 def streaming_ann_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -1789,40 +1688,20 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFram
     path and its crash replay stay covered by the operator tests) and
     the drained table is EXACTLY the batch-materialized one — the
     result, and the oracle, are the inline ``ann_ivfpq_topk``."""
-    import os
-    import tempfile
-
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..datalake import Lake
     from ..operators.similarity import ann_index_topk, materialize_ann_index
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-
-    def _bootstrap() -> str:
-        boot = tempfile.mkdtemp(prefix="stream_ann_boot_")
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-        blake = Lake(os.path.join(boot, "lake"))
-        # quantizer training and arrival staging touch disjoint outputs —
-        # overlap them (the dedup-harness trick)
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            train = ex.submit(
-                materialize_ann_index, emb, blake, "s1", include_corpus=False
-            )
-            stage = ex.submit(
-                _stage_arrival_batches, emb, F.expr("vec_id % 3"), src_dir, 3
-            )
-            train.result()
-            stage.result()
-        return boot
-
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
-    src = os.path.join(tmp, "in")
+    tmp = _bootstrap(
+        "stream_ann_boot_",
+        lambda root: materialize_ann_index(
+            emb, Lake(os.path.join(root, "lake")), "s1", include_corpus=False
+        ),
+        emb,
+        F.expr("vec_id % 3"),
+    )
     lake = Lake(os.path.join(tmp, "lake"))
-    stream_ann_index(spark, src, lake, "s1", f"{tmp}/ckpt", max_files_per_trigger=None)
+    stream_ann_index(spark, f"{tmp}/in", lake, "s1", f"{tmp}/ckpt", max_files_per_trigger=None)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     return ann_index_topk(queries, emb, spark, lake, snapshot="s1", k=k)
 
@@ -1891,23 +1770,8 @@ def stream_feature_upsert(
             f"{state_dir}/features/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(FEATURE_EVENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_feature_upsert over {source_dir!r} did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, FEATURE_EVENTS_DDL, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_feature_upsert", timeout_s)
 
 
 def read_stream_features(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1938,20 +1802,14 @@ def streaming_feature_store_latest(spark: SparkSession, sf_dir: str) -> DataFram
     the streamed upsert is proven equivalent to the batch
     materialization (also asserted bit-exactly in
     ``tests/test_streaming.py``)."""
-    import os
-    import tempfile
-
     from ..datalake import load_events
     from ..featurestore import online_latest
 
     ev = load_events(spark, sf_dir).select(
         "event_id", "ts_us", "user_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_feat_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(ev, F.expr("event_id % 3"), src, 3)
-    stream_feature_upsert(spark, src, f"{tmp}/state", f"{tmp}/ckpt")
+    tmp = _bootstrap("stream_feat_", None, ev, F.expr("event_id % 3"))
+    stream_feature_upsert(spark, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt")
     return (
         online_latest(read_stream_features(spark, f"{tmp}/state"), "user_id", "event_date")
         .select(
@@ -2014,21 +1872,8 @@ def stream_cdc_changes(
             .parquet(f"{state_dir}/batch_id={batch_id}")
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_cdc_changes did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_cdc_changes", timeout_s)
 
 
 def read_cdc_snapshot(
@@ -2065,9 +1910,6 @@ def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream. Because the latest-change merge is associative, the drained
     snapshot is bit-identical to the batch apply, and the oracle is the
     batch arithmetic."""
-    import os
-    import tempfile
-
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     snapshot = orders.filter(
@@ -2090,17 +1932,14 @@ def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate").cast("date").alias("last_change"),
         F.col("l_linenumber").alias("line_number"),
     )
-    tmp = tempfile.mkdtemp(prefix="stream_cdc_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(changes, F.expr("order_key % 3"), src, 3)
+    tmp = _bootstrap("stream_cdc_", None, changes, F.expr("order_key % 3"))
     ddl = (
         "order_key bigint, op string, status string, total_price double,"
         " last_change date, line_number int"
     )
     stream_cdc_changes(
         spark,
-        src,
+        f"{tmp}/in",
         f"{tmp}/state",
         f"{tmp}/ckpt",
         ddl,
@@ -2145,21 +1984,8 @@ def stream_sales_partials(
             f"{state_dir}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_sales_partials did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_sales_partials", timeout_s)
 
 
 def streaming_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,9 +1994,6 @@ def streaming_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary off the merged batch partials. The oracle is the batch
     ``daily_sales_summary`` SQL — streamed maintenance must equal the
     full recompute bit-for-bit or the view is corrupt."""
-    import os
-    import tempfile
-
     from .. import cleaning, ivm
 
     silver = cleaning.clean_orders(
@@ -2178,15 +2001,12 @@ def streaming_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "order_key", "customer_key", "order_date", "total_price", "is_complete_order"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_ivm_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(silver, F.expr("order_key % 3"), src, 3)
+    tmp = _bootstrap("stream_ivm_", None, silver, F.expr("order_key % 3"))
     ddl = (
         "order_key bigint, customer_key bigint, order_date date,"
         " total_price double, is_complete_order boolean"
     )
-    stream_sales_partials(spark, src, f"{tmp}/state", f"{tmp}/ckpt", ddl)
+    stream_sales_partials(spark, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt", ddl)
     merged = ivm.reaggregate_partials(
         spark.read.parquet(f"{tmp}/state").drop("batch_id")
     )
@@ -2218,21 +2038,8 @@ def stream_rule_partials(
             f"{state_dir}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_rule_partials did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_rule_partials", timeout_s)
 
 
 def streaming_rule_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2241,9 +2048,6 @@ def streaming_rule_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the summary off the drained state. Oracle = the batch
     ``rule_driven_aggregation`` SQL — config-driven streaming ==
     config-driven batch, bit-for-bit."""
-    import os
-    import tempfile
-
     from .. import cleaning, ivm
     from ..rules import MONTHLY_REVENUE_RULE as rule
 
@@ -2258,15 +2062,12 @@ def streaming_rule_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_price",
         "is_complete_order",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_rule_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(silver, F.expr("order_key % 3"), src, 3)
+    tmp = _bootstrap("stream_rule_", None, silver, F.expr("order_key % 3"))
     ddl = (
         "order_key bigint, customer_key bigint, order_year int, order_month int,"
         " order_status string, total_price double, is_complete_order boolean"
     )
-    stream_rule_partials(spark, rule, src, f"{tmp}/state", f"{tmp}/ckpt", ddl)
+    stream_rule_partials(spark, rule, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt", ddl)
     stacked = spark.read.parquet(f"{tmp}/state").drop("batch_id")
     return ivm.rule_summary_from_partials(stacked, rule).orderBy(
         *rule.group_by_columns
@@ -2282,10 +2083,8 @@ def streaming_quartile_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     state. Histograms merge by per-value count addition, so the
     streamed state is bit-identical to the one-pass build and the
     oracle is shared with ``rule_quartile_aggregation``."""
-    import os
-    import tempfile
-
     from .. import cleaning, ivm
+    from ..cache import tracked_persist
     from ..rules import QUARTILE_RULE as rule
 
     silver = cleaning.clean_orders(
@@ -2297,17 +2096,12 @@ def streaming_quartile_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_price",
         "is_complete_order",
     )
-    tmp = tempfile.mkdtemp(prefix="stream_pctl_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(silver, F.expr("order_key % 3"), src, 3)
+    tmp = _bootstrap("stream_pctl_", None, silver, F.expr("order_key % 3"))
     ddl = (
         "order_key bigint, order_status string, days_since_order int,"
         " total_price double, is_complete_order boolean"
     )
-    stream_rule_partials(spark, rule, src, f"{tmp}/state", f"{tmp}/ckpt", ddl)
-    from ..cache import tracked_persist
-
+    stream_rule_partials(spark, rule, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt", ddl)
     # the main-measure fold and the histogram fold both read the drained
     # state — persist the (group-sized) stack so it loads once
     stacked = tracked_persist(
@@ -2327,10 +2121,8 @@ def streaming_ndv_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     state. Registers merge by element-wise MAX, so the streamed sketch
     state is bit-identical to the one-pass build and the oracle is
     shared with ``rule_ndv_aggregation``."""
-    import os
-    import tempfile
-
     from .. import cleaning, ivm
+    from ..cache import tracked_persist
     from ..rules import NDV_RULE as rule
 
     silver = cleaning.clean_orders(
@@ -2338,17 +2130,12 @@ def streaming_ndv_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "order_key", "customer_key", "order_status", "total_price", "is_complete_order"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_ndv_")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    _stage_arrival_batches(silver, F.expr("order_key % 3"), src, 3)
+    tmp = _bootstrap("stream_ndv_", None, silver, F.expr("order_key % 3"))
     ddl = (
         "order_key bigint, customer_key bigint, order_status string,"
         " total_price double, is_complete_order boolean"
     )
-    stream_rule_partials(spark, rule, src, f"{tmp}/state", f"{tmp}/ckpt", ddl)
-    from ..cache import tracked_persist
-
+    stream_rule_partials(spark, rule, f"{tmp}/in", f"{tmp}/state", f"{tmp}/ckpt", ddl)
     # the profile's count fold and register digest both read the drained
     # state — persist the (group-sized) stack so it loads once
     stacked = tracked_persist(spark.read.parquet(f"{tmp}/state").drop("batch_id"))
@@ -2408,21 +2195,8 @@ def stream_stats_drift(
             "overwrite"
         ).parquet(f"{state_dir}/drift/batch_id={batch_id}")
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_stats_drift did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_stats_drift", timeout_s)
 
 
 def streaming_stats_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2433,9 +2207,6 @@ def streaming_stats_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative drift. The oracle is the batch ``stats_drift_report``
     SQL: the streamed drift must equal the one-shot ANALYZE diff
     bit-for-bit."""
-    import os
-    import tempfile
-
     from .. import quality
     from ..datalake import Lake
 
@@ -2443,9 +2214,9 @@ def streaming_stats_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("o_orderdate").cast("date")
     old = orders.filter(d < F.lit("1997-01-01").cast("date"))
     new = orders.filter(d >= F.lit("1997-01-01").cast("date"))
-    def _bootstrap() -> str:
-        boot = tempfile.mkdtemp(prefix="stream_stats_boot_")
-        blake = Lake(os.path.join(boot, "lake"))
+
+    def _snapshot_stats(root: str) -> None:
+        blake = Lake(os.path.join(root, "lake"))
         # the decoy's only job is to exercise latest-snapshot selection,
         # so it ANALYZEs a tiny early slice, not half the table
         for snap_date, frame in (
@@ -2460,23 +2231,16 @@ def streaming_stats_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "stats_snapshots",
                 partition_by=("snapshot_date",),
             )
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-        _stage_arrival_batches(new, F.expr("o_orderkey % 3"), src_dir, 3)
-        return boot
 
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
+    tmp = _bootstrap("stream_stats_boot_", _snapshot_stats, new, F.expr("o_orderkey % 3"))
     lake = Lake(os.path.join(tmp, "lake"))
-    src = os.path.join(tmp, "in")
     ddl = (
         "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
     )
     stream_stats_drift(
         spark,
-        src,
+        f"{tmp}/in",
         lake.path("gold", "stats_snapshots"),
         f"{tmp}/state",
         f"{tmp}/ckpt",
@@ -2559,21 +2323,8 @@ def stream_cdc_merge(
         if snapshot_each_batch and not rep.get("skipped_replay"):
             lake.snapshot_version(layer, table)
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_cdc_merge did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_cdc_merge", timeout_s)
 
 
 def streaming_lake_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2585,9 +2336,6 @@ def streaming_lake_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge. Batches touch disjoint key sets, so the final table is
     bit-identical to the single-batch lake merge and the oracle is the
     shared batch-apply arithmetic."""
-    import os
-    import tempfile
-
     from ..datalake import Lake
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -2612,39 +2360,22 @@ def streaming_lake_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate").cast("date").alias("last_change"),
         F.col("l_linenumber").alias("line_number"),
     )
-    def _bootstrap() -> str:
-        from concurrent.futures import ThreadPoolExecutor
-
-        boot = tempfile.mkdtemp(prefix="stream_cdc_merge_boot_")
-        blake = Lake(os.path.join(boot, "lake"))
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-        # snapshot build and arrival staging touch disjoint outputs —
-        # overlap them (guide §2.6, the dedup-harness trick)
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            snap = ex.submit(
-                blake.write_clustered, snapshot, "silver", "orders_current",
-                ("order_key",),
-            )
-            stage = ex.submit(
-                _stage_arrival_batches, changes, F.expr("order_key % 3"), src_dir, 3
-            )
-            snap.result()
-            stage.result()
-        return boot
-
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
+    tmp = _bootstrap(
+        "stream_cdc_merge_boot_",
+        lambda root: Lake(os.path.join(root, "lake")).write_clustered(
+            snapshot, "silver", "orders_current", ("order_key",)
+        ),
+        changes,
+        F.expr("order_key % 3"),
+    )
     lake = Lake(os.path.join(tmp, "lake"))
-    src = os.path.join(tmp, "in")
     ddl = (
         "order_key bigint, op string, status string, total_price double,"
         " last_change date, line_number int"
     )
     stream_cdc_merge(
         spark,
-        src,
+        f"{tmp}/in",
         lake,
         "silver",
         "orders_current",
@@ -2697,21 +2428,8 @@ def stream_gold_refresh(
             batch_id=f"goldrefresh-{batch_id}",
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_gold_refresh did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_gold_refresh", timeout_s)
 
 
 def stream_rule_summary_refresh(
@@ -2750,23 +2468,8 @@ def stream_rule_summary_refresh(
             batch_id=f"rulerefresh-{batch_id}",
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(
-            f"stream_rule_summary_refresh did not finish within {timeout_s}s"
-        )
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_rule_summary_refresh", timeout_s)
 
 
 def streaming_rule_summary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2776,9 +2479,6 @@ def streaming_rule_summary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`stream_rule_summary_refresh` as three interleaved
     micro-batches, read the live table back. Shares the batch
     ``rule_driven_aggregation`` oracle."""
-    import os
-    import tempfile
-
     from .. import cleaning, ivm
     from ..datalake import Lake
     from ..rules import MONTHLY_REVENUE_RULE as rule
@@ -2798,45 +2498,21 @@ def streaming_rule_summary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("order_date")
     lit_cut = F.lit("1998-06-01").cast("date")
 
-    def _bootstrap() -> str:
-        from concurrent.futures import ThreadPoolExecutor
+    def _build_summary(root: str) -> None:
+        # partials → summary is a data dependency (serial inside this
+        # build); the arrival staging is independent of both
+        blake = Lake(os.path.join(root, "lake"))
+        ivm.maintain_rule_partials(blake, silver.filter(d < lit_cut), rule, "order_year")
+        initial = ivm.rule_summary_from_partials(
+            blake.read(spark, "gold", f"{rule.name}_partials"), rule
+        )
+        blake.write(initial, "gold", f"{rule.name}_summary")
 
-        boot = tempfile.mkdtemp(prefix="stream_rule_summary_boot_")
-        blake = Lake(os.path.join(boot, "lake"))
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-
-        def _build_summary() -> None:
-            # partials → summary is a data dependency (serial inside
-            # this future); the arrival staging is independent of both
-            ivm.maintain_rule_partials(
-                blake, silver.filter(d < lit_cut), rule, "order_year"
-            )
-            initial = ivm.rule_summary_from_partials(
-                blake.read(spark, "gold", f"{rule.name}_partials"), rule
-            )
-            blake.write(initial, "gold", f"{rule.name}_summary")
-
-        # summary build and arrival staging touch disjoint outputs —
-        # overlap them (guide §2.6, the dedup-harness trick)
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            build = ex.submit(_build_summary)
-            stage = ex.submit(
-                _stage_arrival_batches,
-                silver.filter(d >= lit_cut),
-                F.expr("order_key % 3"),
-                src_dir,
-                3,
-            )
-            build.result()
-            stage.result()
-        return boot
-
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
+    tmp = _bootstrap(
+        "stream_rule_summary_boot_", _build_summary, silver.filter(d >= lit_cut),
+        F.expr("order_key % 3"),
+    )
     lake = Lake(os.path.join(tmp, "lake"))
-    src = os.path.join(tmp, "in")
     ddl = (
         "order_key bigint, customer_key bigint, order_year int, order_month int,"
         " order_date date, order_status string, total_price double,"
@@ -2846,7 +2522,7 @@ def streaming_rule_summary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         rule,
         "order_year",
-        src,
+        f"{tmp}/in",
         lake,
         os.path.join(tmp, "ckpt"),
         ddl,
@@ -2874,13 +2550,9 @@ def streaming_gold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance (ledgered upsert + fold + ledgered merge); at 100 TB
     those same actions are delta-sized while a full gold rebuild is
     table-sized, which is the trade this query certifies."""
-    import os
-    import tempfile
-
     from .. import cleaning, ivm
-    from ..datalake import Lake
-
     from ..cache import tracked_persist
+    from ..datalake import Lake
 
     # the dim side is re-joined in EVERY micro-batch's refresh (and the
     # bootstrap): persist it once for the query's lifetime
@@ -2906,49 +2578,25 @@ def streaming_gold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("order_date")
     lit_cut = F.lit("1998-06-01").cast("date")
 
-    def _bootstrap() -> str:
-        from concurrent.futures import ThreadPoolExecutor
+    def _build_gold(root: str) -> None:
+        # partials → gold is a data dependency (serial inside this
+        # build); the arrival staging is independent of both
+        blake = Lake(os.path.join(root, "lake"))
+        ivm.maintain_customer_partials(blake, silver_orders.filter(d < lit_cut))
+        initial = ivm.customer_analytics_from_partials(
+            silver_customers, blake.read(spark, "gold", "customer_partials")
+        )
+        blake.write(
+            initial.repartitionByRange(16, "customer_key").sortWithinPartitions("customer_key"),
+            "gold",
+            "customer_analytics",
+        )
 
-        boot = tempfile.mkdtemp(prefix="stream_gold_refresh_boot_")
-        blake = Lake(os.path.join(boot, "lake"))
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-
-        def _build_gold() -> None:
-            # partials → gold is a data dependency (stays serial inside
-            # this future); the arrival staging is independent of both
-            ivm.maintain_customer_partials(blake, silver_orders.filter(d < lit_cut))
-            initial = ivm.customer_analytics_from_partials(
-                silver_customers, blake.read(spark, "gold", "customer_partials")
-            )
-            blake.write(
-                initial.repartitionByRange(16, "customer_key").sortWithinPartitions(
-                    "customer_key"
-                ),
-                "gold",
-                "customer_analytics",
-            )
-
-        # gold build and arrival staging touch disjoint outputs —
-        # overlap them (guide §2.6, the dedup-harness trick)
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            build = ex.submit(_build_gold)
-            stage = ex.submit(
-                _stage_arrival_batches,
-                silver_orders.filter(d >= lit_cut),
-                F.expr("order_key % 3"),
-                src_dir,
-                3,
-            )
-            build.result()
-            stage.result()
-        return boot
-
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
+    tmp = _bootstrap(
+        "stream_gold_refresh_boot_", _build_gold, silver_orders.filter(d >= lit_cut),
+        F.expr("order_key % 3"),
+    )
     lake = Lake(os.path.join(tmp, "lake"))
-    src = os.path.join(tmp, "in")
     ddl = (
         "order_key bigint, customer_key bigint, order_year int,"
         " order_date date, total_price double, days_since_order int,"
@@ -2956,7 +2604,7 @@ def streaming_gold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream_gold_refresh(
         spark,
-        src,
+        f"{tmp}/in",
         lake,
         silver_customers,
         os.path.join(tmp, "ckpt"),
@@ -3027,21 +2675,8 @@ def stream_scd2_updates(
             evolve_schema=evolve_schema,
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(source_dir)
-    query = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = query.awaitTermination(timeout_s)
-    query.stop()
-    _await_deregistration(spark, query)
-    if not finished:
-        raise TimeoutError(f"stream_scd2_updates did not finish within {timeout_s}s")
+    raw = _file_stream(spark, schema_ddl, source_dir, max_files_per_trigger)
+    _drain(raw, write_batch, checkpoint_dir, "stream_scd2_updates", timeout_s)
 
 
 def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3054,9 +2689,6 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming SCD2 merge. Batches touch disjoint key sets, so the
     drained history is bit-identical to the single-batch lake merge and
     the oracle is shared with ``lake_scd2_merged_history``."""
-    import os
-    import tempfile
-
     from ..datalake import Lake
     from ..scd import scd2_history
 
@@ -3076,40 +2708,19 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak_cols=["order_key"],
         carry_cols=["order_key"],
     )
-    def _bootstrap() -> str:
-        from concurrent.futures import ThreadPoolExecutor
-
-        boot = tempfile.mkdtemp(prefix="stream_scd2_boot_")
-        blake = Lake(os.path.join(boot, "lake"))
-        src_dir = os.path.join(boot, "in")
-        os.makedirs(src_dir)
-        # seeded-history build and arrival staging touch disjoint
-        # outputs — overlap them (guide §2.6, the dedup-harness trick)
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            seed = ex.submit(
-                blake.write_clustered, hist1, "gold", "priority_history",
-                ("customer_key",),
-            )
-            stage = ex.submit(
-                _stage_arrival_batches,
-                changes.filter(F.col("change_date") >= split),
-                F.expr("customer_key % 3"),
-                src_dir,
-                3,
-            )
-            seed.result()
-            stage.result()
-        return boot
-
-    # bootstrap rebuilt per invocation (bench honesty — nothing
-    # memoized across invocations); the streamed phase runs on top
-    tmp = _bootstrap()
+    tmp = _bootstrap(
+        "stream_scd2_boot_",
+        lambda root: Lake(os.path.join(root, "lake")).write_clustered(
+            hist1, "gold", "priority_history", ("customer_key",)
+        ),
+        changes.filter(F.col("change_date") >= split),
+        F.expr("customer_key % 3"),
+    )
     lake = Lake(os.path.join(tmp, "lake"))
-    src = os.path.join(tmp, "in")
     ddl = "customer_key bigint, priority string, change_date date, order_key bigint"
     stream_scd2_updates(
         spark,
-        src,
+        f"{tmp}/in",
         lake,
         "gold",
         "priority_history",

@@ -119,3 +119,31 @@ def test_reprobe_child_runs_in_fresh_process(spark, sf_dir):
     assert timings["silver_orders"] > 0
     assert q_errs == {}  # nothing raised; unknown names just skipped
     assert calib and calib["md5_s"] > 0 and calib["arrow_s"] > 0
+
+
+def test_head_line_is_compact_json_within_budget():
+    """The bench's final line is built from the detail record alone (no
+    Spark sweep needed) and parses as compact JSON: it names the detail
+    file, keeps the slowest queries first, and elides the rest to stay
+    under the recorder's ~2000-character window."""
+    timings = {f"query_{i:03d}": round(0.5 + i / 100, 3) for i in range(200)}
+    detail = {
+        "value": round(sum(timings.values()), 3),
+        "queries": timings,
+        "sf": 0.1,
+        "sweeps": 3,
+        "cpu_steal_pct": 0.4,
+        "calibration": [{"md5_s": 1.0}, {"md5_s": 1.5}],
+        "reprobe": {"query_199": {"prev_min": 1.0}},
+    }
+    line = bench._head_line(detail, "BENCH_DETAIL_r13.json", "BENCH_r12.json")
+    head = json.loads(line)
+    assert line == json.dumps(head, separators=(",", ":"))
+    assert len(line) <= 1900
+    assert head["detail"] == "BENCH_DETAIL_r13.json"
+    assert head["reprobe_baseline"] == "BENCH_r12.json"
+    assert head["calibration_drift"] == 1.5 and head["reprobed_movers"] == 1
+    assert head["queries_total"] == 200
+    assert head["queries_elided"] == 200 - len(head["queries"]) > 0
+    kept = list(head["queries"])
+    assert kept == sorted(timings, key=lambda n: -timings[n])[: len(kept)]

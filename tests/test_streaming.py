@@ -1648,3 +1648,55 @@ def test_streaming_gold_refresh_invocations_are_independent(spark, sf_dir):
     first = sorted(map(tuple, streaming.streaming_gold_refresh(spark, sf_dir).collect()))
     second = sorted(map(tuple, streaming.streaming_gold_refresh(spark, sf_dir).collect()))
     assert second == first and len(first) > 0
+
+
+def test_drain_stops_and_deregisters_on_timeout_and_on_batch_error(spark, tmp_path):
+    """The one drain lifecycle cleans up on its failure paths too: a
+    writer slower than ``timeout_s`` raises ``TimeoutError``, a writer
+    that raises propagates its error, and in both cases no query is left
+    active."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(2):
+        pq.write_table(pa.table({"id": pa.array([i], pa.int64())}), str(src / f"f{i}.parquet"))
+    raw = streaming._file_stream(spark, "id bigint", str(src), 1)
+
+    def slow(batch_df, batch_id):
+        time.sleep(3)
+
+    def failing(batch_df, batch_id):
+        raise ValueError("writer failed on purpose")
+
+    with pytest.raises(TimeoutError, match="slow_drain did not finish within 1s"):
+        streaming._drain(raw, slow, str(tmp_path / "ckpt_slow"), "slow_drain", 1)
+    assert spark.streams.active == []
+    with pytest.raises(Exception, match="writer failed on purpose"):
+        streaming._drain(raw, failing, str(tmp_path / "ckpt_fail"), "failing_drain", 60)
+    assert spark.streams.active == []
+
+
+def test_release_caches_removes_streaming_temp_roots(spark, sf_dir, tmp_path):
+    """A consumed streaming contract query leaves the temp directory as
+    it found it once ``release_caches`` runs: its bootstrapped lake,
+    arrival files and checkpoint live under one tracked temp root."""
+    import os
+    import tempfile
+
+    from dataengineeringpipeline_spark.cache import release_caches
+
+    # the JVM unpacks its parquet codec's native library into the temp
+    # directory once per process, on first use: do that before looking
+    spark.range(1).write.parquet(str(tmp_path / "codec_warmup"))
+    tmp = tempfile.gettempdir()
+    release_caches()
+    before = set(os.listdir(tmp))
+    rows = streaming.streaming_scd2_history(spark, sf_dir).collect()
+    assert rows
+    release_caches()
+    assert set(os.listdir(tmp)) - before == set()

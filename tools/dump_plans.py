@@ -13,6 +13,9 @@ from __future__ import annotations
 import os
 import sys
 
+# the repo root, so the package imports without setting PYTHONPATH
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def main() -> int:
     outdir = sys.argv[1]

@@ -16,6 +16,9 @@ import sys
 import time
 import urllib.request
 
+# the repo root, so the package imports without setting PYTHONPATH
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def _rest(app_ui: str, path: str):
     with urllib.request.urlopen(f"{app_ui}/api/v1/{path}") as r:

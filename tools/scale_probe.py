@@ -19,6 +19,9 @@ import os
 import sys
 import time
 
+# the repo root, so the package imports without setting PYTHONPATH
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def main() -> int:
     names = sys.argv[1:]
