@@ -12,6 +12,14 @@ At 100 TB the things that matter here are:
   scan (check ``PushedFilters`` / ``ReadSchema`` in ``.explain``);
 - **no driver-side data movement** — every read/write is a distributed
   Spark job.
+
+Every :class:`Lake` mutation publishes through ONE staged commit,
+:func:`_commit`: one Spark write into a stage dir, untouched files
+hard-linked in, the applied-batch ledger, schema and bloom-index
+sidecars riding the stage, then a two-rename swap. Each mutation enters
+through one crash-recovery sweep for its kind (:func:`_enter`), and the
+key-pruned ones (purge, merge, SCD2 merge) share one footer-envelope
+prune (:func:`_key_files` + :func:`_hit_rels`).
 """
 
 from __future__ import annotations
@@ -22,6 +30,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .cache import tracked_mkdtemp
 
 #: Tables generated by the test-data driver (TPC-H-ish star schema plus an
 #: event stream, a documents corpus, and an embeddings table).
@@ -390,26 +400,15 @@ class Lake:
         """Lock-free body of :meth:`compact` — also invoked by the
         merges' ``compact_after_files`` auto-compaction hook, which
         already holds the table's writer fence."""
-        import math
-
-        path = self.path(layer, table)
-        _recover_swap(path, "__compacting", "__precompact")
-        idx_cols = _indexed_cols(path)
-        before_files, before_bytes = _file_stats(path)
-        df = _read_table(spark, path)  # full rewrite bakes an evolved schema in
-        rows = df.count()
-        total_mb = max(before_bytes / 1e6, 1e-3)
-        n_tasks = max(1, math.ceil(total_mb / target_file_mb))
-        rows_per_file = max(1, int(rows * target_file_mb / total_mb))
-        out = df.repartition(*partition_by) if partition_by else df.repartition(n_tasks)
-        tmp = path + "__compacting"
-        writer = out.write.mode("overwrite").option("maxRecordsPerFile", rows_per_file)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        for c in idx_cols:  # rebuild INTO the stage: the index rides the swap
-            _build_index_at(spark, tmp, c, 0.01)
-        _atomic_swap(path, tmp, path + "__precompact")
+        path = _enter(self.path(layer, table), "compact")
+        rows, before_files, before_bytes = _rewrite(
+            spark,
+            path,
+            "compact",
+            target_file_mb,
+            lambda df, n: df.repartition(*partition_by) if partition_by else df.repartition(n),
+            partition_by,
+        )
         after_files, after_bytes = _file_stats(path)
         return {
             "table": f"{layer}.{table}",
@@ -469,12 +468,10 @@ class Lake:
         usable stats are conservatively rewritten. The opt-out list is
         user-request-sized (thousands, not billions) — it is collected
         once for the pruning check and broadcast for the ``left_anti``
-        rewrite, and the audit counts ride the rewrite itself (footer
-        row counts + a count of the persisted kept frame — persist
-        rather than ``Observation``, which in Spark 4.1 leaves JVM
-        state that breaks later RDD-backed jobs; see
-        ``featurestore.ingest_features``), so no extra full-table pass
-        runs before or after. On a lakehouse format
+        rewrite, and the audit counts ride the rewrite itself (parquet
+        footer row counts of the live and the staged files, see
+        :func:`_stage_rows`), so no extra Spark pass runs before or
+        after the rewrite. On a lakehouse format
         this is DELETE + VACUUM; the audit dict (rows before / removed
         / after, files rewritten / linked) is what the compliance log
         records either way.
@@ -486,12 +483,13 @@ class Lake:
         the purge with :meth:`expire_snapshots` — snapshots predating
         the purge intentionally preserve the pre-purge bytes.
         """
-        path = self.path(layer, table)
-        _recover_swap(path, "__purging", "__prepurge")
-        files = _key_envelopes(path, key_col)
+        path = _enter(self.path(layer, table), "purge")
+        keys_df = keys.toDF(key_col)
+        files_by_col = _key_files(path, (key_col,))
+        files = files_by_col[0]
         rows_before = sum(f[1] for f in files)
-        key_vals = sorted({r[0] for r in keys.toDF(key_col).collect()})
-        affected = [f for f in files if _envelope_hits(f[2], f[3], key_vals)]
+        hit = _hit_rels(spark, files_by_col, (key_col,), keys_df, large=False)
+        affected = [f for f in files if f[0] in hit]
         audit = {
             "table": f"{layer}.{table}",
             "key_col": key_col,
@@ -505,36 +503,19 @@ class Lake:
                 "rows_removed": 0,
                 "rows_after": rows_before,
             }
-        stage = path + "__purging"
+        kept = _read_table(
+            spark, path, [os.path.join(path, f[0]) for f in affected]
+        ).join(F.broadcast(keys_df), key_col, "left_anti")
         part_cols = _partition_cols(path)
-        kept = (
-            _read_table(spark, path, [os.path.join(path, f[0]) for f in affected])
-            .join(F.broadcast(keys.toDF(key_col)), key_col, "left_anti")
-            .persist()
+        kept_rows = _commit(
+            spark,
+            path,
+            "purge",
+            lambda stage: _writer(kept, part_cols).parquet(stage),
+            src=path,
+            keep=[f[0] for f in files if f[0] not in hit],
         )
-        try:
-            writer = kept.write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(stage)
-            kept_rows = kept.count()  # served from the cache the write built
-        finally:
-            kept.unpersist()
         affected_before = sum(f[1] for f in affected)
-        # Hard-link every unaffected file into the staged table at its
-        # original relative path: byte-identical (same inode), no data
-        # movement. Spark part-file names are UUID-suffixed, so linked
-        # originals cannot collide with the rewritten files.
-        hit = {f[0] for f in affected}
-        for rel, _rows, _mn, _mx in files:
-            if rel in hit:
-                continue
-            dst = os.path.join(stage, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.link(os.path.join(path, rel), dst)
-        _carry_schema(path, stage)  # linked files may predate an evolution
-        _carry_file_indexes(spark, path, stage, {f[0] for f in files} - hit)
-        _atomic_swap(path, stage, path + "__prepurge")
         return {
             **audit,
             "rows_before": rows_before,
@@ -618,41 +599,19 @@ class Lake:
         from .scd import cdc_apply  # latest-per-key semantics, one code path
 
         key_cols = (key_col,) if isinstance(key_col, str) else tuple(key_col)
-        path = self.path(layer, table)
-        _recover_swap(path, "__merging", "__premerge")
+        path = _enter(self.path(layer, table), "merge")
         applied = _read_ledger(path)
-        # composite keys prune on EVERY key column with usable stats
-        # (envelopes from one footer walk, hit sets intersected): each
-        # dimension's prune is independently conservative — a file
-        # excluded by ANY dimension cannot hold any touched key tuple —
-        # so a low-cardinality lead key no longer degrades the prune to
-        # rewrite-everything when a later key is selective. Dimensions
-        # whose files are all stat-less are skipped (their prune pass
-        # would hit everything and refine nothing).
-        prune_cols = key_cols
-        multi = _key_envelopes_multi(path, prune_cols)
-        files_by_dim = [
-            [(rel, rows, envs[i][0], envs[i][1]) for rel, rows, envs in multi]
-            for i in range(len(prune_cols))
-        ]
-        files = files_by_dim[0]
-        extra_dims = [
-            i
-            for i in range(1, len(prune_cols))
-            if any(f[2] is not None and f[3] is not None for f in files_by_dim[i])
-        ]
+        files_by_col = _key_files(path, key_cols)  # composite keys: see _hit_rels
+        files = files_by_col[0]
         rows_before = sum(f[1] for f in files)
+        audit = {
+            "table": f"{layer}.{table}",
+            "key_col": key_cols[0] if len(key_cols) == 1 else key_cols,
+            "files_total": len(files),
+        }
         if batch_id is not None and batch_id in applied:
-            return {  # crash-replayed batch: already committed, no-op
-                "table": f"{layer}.{table}",
-                "key_col": key_cols[0] if len(key_cols) == 1 else key_cols,
-                "files_total": len(files),
-                "files_rewritten": 0,
-                "rows_before": rows_before,
-                "rows_after": rows_before,
-                "rows_upserted": 0,
-                "skipped_replay": True,
-            }
+            # crash-replayed batch: already committed, no-op
+            return _unchanged(audit, rows_before, rows_upserted=0, skipped_replay=True)
         new_applied = applied + ([batch_id] if batch_id is not None else [])
         table_schema = _read_table(spark, path).schema
         schema_json = _read_schema_json(path)
@@ -711,52 +670,16 @@ class Lake:
             ).first()
             n_keys, n_upserts = counts["k"], counts["u"]
             large = n_keys > self.merge_broadcast_keys
-            audit = {
-                "table": f"{layer}.{table}",
-                "key_col": key_cols[0] if len(key_cols) == 1 else key_cols,
-                "files_total": len(files),
-                "key_path": "distributed" if large else "broadcast",
-            }
+            audit["key_path"] = "distributed" if large else "broadcast"
             if not n_keys:  # empty batch: zero-IO merge (ledger still commits)
                 if batch_id is not None:
                     _write_ledger_atomic(path, new_applied)
                 if evolve_schema and schema_json is not None:
                     _write_schema_json(path, schema_json)  # evolution alone
-                return {
-                    **audit,
-                    "files_rewritten": 0,
-                    "rows_before": rows_before,
-                    "rows_after": rows_before,
-                    "rows_upserted": 0,
-                }
-            if large:
-                hit_rels = _affected_rels_distributed(
-                    spark, files, latest.select(key_cols[0])
-                )
-                for i in extra_dims:
-                    if not hit_rels:
-                        break
-                    hit_rels = hit_rels & _affected_rels_distributed(
-                        spark, files_by_dim[i], latest.select(key_cols[i])
-                    )
-            else:
-                key_vals = _collect_key_vals(latest, key_cols[0])
-                hit_rels = {
-                    f[0] for f in files if _envelope_hits(f[2], f[3], key_vals)
-                }
-                for i in extra_dims:
-                    if not hit_rels:
-                        break
-                    key_vals_i = _collect_key_vals(latest, key_cols[i])
-                    hit_rels = hit_rels & {
-                        f[0]
-                        for f in files_by_dim[i]
-                        if _envelope_hits(f[2], f[3], key_vals_i)
-                    }
-            affected = [f for f in files if f[0] in hit_rels]
+                return _unchanged(audit, rows_before, rows_upserted=0)
+            hit = _hit_rels(spark, files_by_col, key_cols, latest, large)
+            affected = [f for f in files if f[0] in hit]
             audit["files_rewritten"] = len(affected)
-            stage = path + "__merging"
-            part_cols = _partition_cols(path)
             # above the threshold the key set stays distributed: no
             # broadcast of the touched keys, shuffle anti/inner joins
             # instead (AQE may still pick broadcast when the batch turns
@@ -825,32 +748,20 @@ class Lake:
                 )
                 survivors = patched.unionByName(inserts)
             # ONE action computes the stage; the merged-row audit count
-            # comes from the staged files' parquet footers (driver-side
-            # metadata, zero Spark jobs — _stage_rows, the purge_keys
-            # pattern) and rows_upserted from the counts job above.
-            # Previously the merged frame was persisted, written, then
-            # counted 1-2 more times off the cache — extra jobs and a
-            # full cache materialization per merge, at any scale.
+            # comes from the staged files' parquet footers (_commit) and
+            # rows_upserted from the counts job above
             merged = kept.unionByName(survivors)
-            writer = merged.write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(stage)
-            merged_rows = _stage_rows(stage)  # before untouched links
-            hit = {f[0] for f in affected}
-            for rel, _rows, _mn, _mx in files:
-                if rel in hit:
-                    continue
-                dst = os.path.join(stage, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.link(os.path.join(path, rel), dst)
-            if new_applied:  # the ledger rides the swap
-                with open(os.path.join(stage, "_applied_batches.json"), "w") as f:
-                    json.dump(new_applied.to_json(), f)
-            if schema_json is not None:  # the evolved schema rides the swap
-                _write_schema_json(stage, schema_json)
-            _carry_file_indexes(spark, path, stage, {f[0] for f in files} - hit)
-            _atomic_swap(path, stage, path + "__premerge")
+            part_cols = _partition_cols(path)
+            merged_rows = _commit(
+                spark,
+                path,
+                "merge",
+                lambda stage: _writer(merged, part_cols).parquet(stage),
+                src=path,
+                keep=[f[0] for f in files if f[0] not in hit],
+                ledger=new_applied,
+                schema_json=schema_json,
+            )
             ac = self._maybe_autocompact(spark, layer, table)
             affected_before = sum(f[1] for f in affected)
             return {
@@ -926,24 +837,10 @@ class Lake:
         from .scd import scd2_apply_changes  # one code path for the logic
 
         key_cols = (key_col,) if isinstance(key_col, str) else tuple(key_col)
-        path = self.path(layer, table)
-        _recover_swap(path, "__scd2merging", "__prescd2merge")
+        path = _enter(self.path(layer, table), "scd2merge")
         applied = _read_ledger(path)
-        # N-column envelope prune, same shape as merge_changes: one
-        # footer walk gathers every key column's envelopes, the hit
-        # sets intersect, stat-less dimensions are skipped
-        prune_cols = key_cols
-        multi = _key_envelopes_multi(path, prune_cols)
-        files_by_dim = [
-            [(rel, rows, envs[i][0], envs[i][1]) for rel, rows, envs in multi]
-            for i in range(len(prune_cols))
-        ]
-        files = files_by_dim[0]
-        extra_dims = [
-            i
-            for i in range(1, len(prune_cols))
-            if any(f[2] is not None and f[3] is not None for f in files_by_dim[i])
-        ]
+        files_by_col = _key_files(path, key_cols)
+        files = files_by_col[0]
         rows_before = sum(f[1] for f in files)
         audit = {
             "table": f"{layer}.{table}",
@@ -951,13 +848,8 @@ class Lake:
             "files_total": len(files),
         }
         if batch_id is not None and batch_id in applied:
-            return {  # crash-replayed batch: already committed, no-op
-                **audit,
-                "files_rewritten": 0,
-                "rows_before": rows_before,
-                "rows_after": rows_before,
-                "skipped_replay": True,
-            }
+            # crash-replayed batch: already committed, no-op
+            return _unchanged(audit, rows_before, skipped_replay=True)
         new_applied = applied + ([batch_id] if batch_id is not None else [])
         keys_df = updates.select(*key_cols).distinct().persist()
         try:
@@ -967,42 +859,12 @@ class Lake:
             if not n_keys:  # empty batch: zero-IO merge (ledger still commits)
                 if batch_id is not None:
                     _write_ledger_atomic(path, new_applied)
-                return {
-                    **audit,
-                    "files_rewritten": 0,
-                    "rows_before": rows_before,
-                    "rows_after": rows_before,
-                }
-            if large:  # backfill batch: keys never collect to the driver
-                hit_rels = _affected_rels_distributed(
-                    spark, files, keys_df.select(key_cols[0])
-                )
-                for i in extra_dims:
-                    if not hit_rels:
-                        break
-                    hit_rels = hit_rels & _affected_rels_distributed(
-                        spark, files_by_dim[i], keys_df.select(key_cols[i])
-                    )
-            else:
-                key_vals = _collect_key_vals(keys_df, key_cols[0])
-                hit_rels = {
-                    f[0] for f in files if _envelope_hits(f[2], f[3], key_vals)
-                }
-                for i in extra_dims:
-                    if not hit_rels:
-                        break
-                    key_vals_i = _collect_key_vals(keys_df, key_cols[i])
-                    hit_rels = hit_rels & {
-                        f[0]
-                        for f in files_by_dim[i]
-                        if _envelope_hits(f[2], f[3], key_vals_i)
-                    }
-            affected = [f for f in files if f[0] in hit_rels]
+                return _unchanged(audit, rows_before)
+            hit = _hit_rels(spark, files_by_col, key_cols, keys_df, large)
+            affected = [f for f in files if f[0] in hit]
         finally:
             keys_df.unpersist()
         audit["files_rewritten"] = len(affected)
-        stage = path + "__scd2merging"
-        part_cols = _partition_cols(path)
         table_df = _read_table(spark, path)
         schema_json = _read_schema_json(path)
         added: list = []
@@ -1040,11 +902,7 @@ class Lake:
         else:
             dim_aff = table_df.limit(0)
         # ONE action computes the stage; the merged-row audit count
-        # comes from the staged files' parquet footers (driver-side
-        # metadata, zero Spark jobs — _stage_rows, the purge_keys
-        # pattern). Previously the merged frame was persisted, written,
-        # then counted off the cache — an extra job and a full cache
-        # materialization per merge, at any scale.
+        # comes from the staged files' parquet footers (_commit)
         merged = scd2_apply_changes(
             dim_aff,
             updates,
@@ -1055,25 +913,17 @@ class Lake:
             carry_cols=carry_cols,
             broadcast_touched=not large,
         ).select(*table_df.columns)
-        writer = merged.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(stage)
-        merged_rows = _stage_rows(stage)  # before untouched links
-        hit = {f[0] for f in affected}
-        for rel, _rows, _mn, _mx in files:
-            if rel in hit:
-                continue
-            dst = os.path.join(stage, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.link(os.path.join(path, rel), dst)
-        if new_applied:  # the ledger rides the swap
-            with open(os.path.join(stage, "_applied_batches.json"), "w") as f:
-                json.dump(new_applied.to_json(), f)
-        if schema_json is not None:  # carried or newly evolved, rides the swap
-            _write_schema_json(stage, schema_json)
-        _carry_file_indexes(spark, path, stage, {f[0] for f in files} - hit)
-        _atomic_swap(path, stage, path + "__prescd2merge")
+        part_cols = _partition_cols(path)
+        merged_rows = _commit(
+            spark,
+            path,
+            "scd2merge",
+            lambda stage: _writer(merged, part_cols).parquet(stage),
+            src=path,
+            keep=[f[0] for f in files if f[0] not in hit],
+            ledger=new_applied,
+            schema_json=schema_json,
+        )
         ac = self._maybe_autocompact(spark, layer, table)
         affected_before = sum(f[1] for f in affected)
         return {
@@ -1091,32 +941,24 @@ class Lake:
         table: str,
         df: DataFrame,
         partition_by: tuple[str, ...] = (),
-        carry_ledger: bool = True,
     ) -> str:
         """Full-table REPLACE behind the writer fence, readers never
         blocked: stage the new contents, carry the applied-batch ledger
         (the exactly-once memory must outlive a rebuild — a replayed
         streaming batch is still a no-op against the rebuilt table),
-        swap atomically. The rebuild path for migrations
+        rebuild the bloom index of every indexed column the new contents
+        still have, swap atomically. The rebuild path for migrations
         (:func:`ivm.migrate_rule`) and any other schema-changing
         recompute where ``write``'s in-place overwrite would expose
         readers to a half-written table."""
-        path = self.path(layer, table)
-        _recover_swap(path, "__replacing", "__prereplace")
-        stage = path + "__replacing"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage)
-        if carry_ledger and os.path.isdir(path):
-            applied = _read_ledger(path)
-            if applied:
-                with open(os.path.join(stage, _LEDGER), "w") as f:
-                    json.dump(applied.to_json(), f)
-        if os.path.isdir(path):
-            _atomic_swap(path, stage, path + "__prereplace")
-        else:
-            os.rename(stage, path)  # first build: single atomic publish
+        path = _enter(self.path(layer, table), "replace")
+        _commit(
+            spark,
+            path,
+            "replace",
+            lambda stage: _writer(df, partition_by).parquet(stage),
+            reindex=[c for c in _indexed_cols(path) if c in df.columns],
+        )
         return path
 
     @_serialized
@@ -1164,10 +1006,8 @@ class Lake:
         etc.), and both the touched-partition probe and the staged write
         consume it — without the persist each consumer re-runs the scan.
         """
-        path = self.path(layer, table)
-        _recover_swap(path, "__upserting", "__preupsert")
-        ledger_name = _LEDGER
-        applied = _read_ledger(path) if os.path.isdir(path) else _Ledger()
+        path = _enter(self.path(layer, table), "upsert")
+        applied = _read_ledger(path)
         ids = (
             []
             if batch_id is None
@@ -1193,62 +1033,53 @@ class Lake:
             if not touched and not ids:
                 return []
             new_applied = applied + ids
-            stage = path + "__upserting"
             if not os.path.isdir(path):
                 # first load still routes through the merge (with an empty
                 # base) so a delta carrying several partial rows per grain —
                 # e.g. stacked streaming batches — lands collapsed, same as
                 # every later upsert
-                first = merge(delta.limit(0), delta)
-                # one write task per partition value: partitionBy from N
-                # shuffle partitions would write N files per value (128
-                # files for a 90k-row table, measured); partials tables
-                # are grain-bounded so a value's rows always fit one task
-                first.repartition(partition_col).write.mode("overwrite").partitionBy(
-                    partition_col
-                ).parquet(stage)
-                with open(os.path.join(stage, ledger_name), "w") as f:
-                    json.dump(new_applied.to_json(), f)
-                os.rename(stage, path)  # first load: single atomic publish
-                return touched
-            if not touched:  # empty delta, batch_id given: record it atomically
+                base, src, linked_rels = delta.limit(0), None, []
+            elif not touched:  # empty delta, batch_id given: record it atomically
                 _write_ledger_atomic(path, new_applied)
                 return []
-            touched_dirs = {f"{partition_col}={v}" for v in touched}
-            base = self.read(spark, layer, table).where(
-                F.col(partition_col).isin(touched)
-            )
-            merge(base, delta).repartition(partition_col).write.mode(
-                "overwrite"
-            ).partitionBy(partition_col).parquet(stage)
-            from urllib.parse import unquote
+            else:
+                from urllib.parse import unquote
 
-            linked_rels = set()
-            for rel in _data_file_rels(path):
-                # a file is untouched iff it sits under a partition_col= dir
-                # whose value the delta does not hit; dir values PERCENT-
-                # DECODE before comparing (Spark escapes special chars in
-                # dir names — an escaped name comparing unequal would
-                # hard-link a touched partition's OLD file in beside its
-                # rewrite: duplicate rows)
-                comps = set(rel.split(os.sep)[:-1])
-                if not any(c.startswith(f"{partition_col}=") for c in comps):
-                    raise ValueError(
-                        f"{layer}.{table} has a data file outside any "
-                        f"{partition_col}= directory ({rel}); upsert_partitions "
-                        f"requires a table partitioned by {partition_col!r}"
-                    )
-                if not {unquote(c) for c in comps}.isdisjoint(touched_dirs):
-                    continue
-                dst = os.path.join(stage, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.link(os.path.join(path, rel), dst)
-                linked_rels.add(rel)
-            with open(os.path.join(stage, ledger_name), "w") as f:
-                json.dump(new_applied.to_json(), f)
-            _carry_schema(path, stage)  # linked files may predate an evolution
-            _carry_file_indexes(spark, path, stage, linked_rels)
-            _atomic_swap(path, stage, path + "__preupsert")
+                src, linked_rels = path, []
+                touched_dirs = {f"{partition_col}={v}" for v in touched}
+                for rel in _data_file_rels(path):
+                    # a file is untouched iff it sits under a partition_col=
+                    # dir whose value the delta does not hit; dir values
+                    # PERCENT-DECODE before comparing (Spark escapes special
+                    # chars in dir names — an escaped name comparing unequal
+                    # would hard-link a touched partition's OLD file in
+                    # beside its rewrite: duplicate rows)
+                    comps = set(rel.split(os.sep)[:-1])
+                    if not any(c.startswith(f"{partition_col}=") for c in comps):
+                        raise ValueError(
+                            f"{layer}.{table} has a data file outside any "
+                            f"{partition_col}= directory ({rel}); upsert_partitions "
+                            f"requires a table partitioned by {partition_col!r}"
+                        )
+                    if {unquote(c) for c in comps}.isdisjoint(touched_dirs):
+                        linked_rels.append(rel)
+                base = self.read(spark, layer, table).where(
+                    F.col(partition_col).isin(touched)
+                )
+            merged = merge(base, delta).repartition(partition_col)
+            # one write task per partition value: partitionBy from N
+            # shuffle partitions would write N files per value (128
+            # files for a 90k-row table, measured); partials tables
+            # are grain-bounded so a value's rows always fit one task
+            _commit(
+                spark,
+                path,
+                "upsert",
+                lambda stage: _writer(merged, (partition_col,)).parquet(stage),
+                src=src,
+                keep=linked_rels,
+                ledger=new_applied,
+            )
             return touched
         finally:
             delta.unpersist()
@@ -1304,12 +1135,10 @@ class Lake:
             (self._commit_us(layer, table, v) for v in existing), default=0
         )
         tmp = os.path.join(root, f".tmp_v{n}")
-        for rel in _data_file_rels(path):
-            dst = os.path.join(tmp, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.link(os.path.join(path, rel), dst)
-        os.makedirs(tmp, exist_ok=True)  # empty table still snapshots
-        _carry_schema(path, tmp)  # snapshots are self-describing
+        _link_files(path, tmp, _data_file_rels(path))  # empty table too
+        sj = _read_schema_json(path)
+        if sj is not None:  # snapshots are self-describing
+            _write_schema_json(tmp, sj)
         with open(os.path.join(tmp, "_commit_us"), "w") as f:
             f.write(str(max(time.time_ns() // 1_000, prev_us + 1)))
         os.rename(tmp, os.path.join(root, f"v={n}"))
@@ -1375,6 +1204,12 @@ class Lake:
         ``TIMESTAMP AS OF`` analog; see :meth:`resolve_as_of`).
         Partition directories are preserved inside the snapshot, so
         partition pruning works on historical reads too."""
+        vdir = self._version_dir(layer, table, version, as_of)
+        return _read_table(spark, vdir)  # applies the snapshot's own sidecar
+
+    def _version_dir(self, layer: str, table: str, version, as_of) -> str:
+        """Directory of the snapshot named by exactly one of ``version``
+        and ``as_of``; raises ValueError listing what exists if none."""
         if (version is None) == (as_of is None):
             raise ValueError("pass exactly one of version= or as_of=")
         if as_of is not None:
@@ -1385,7 +1220,7 @@ class Lake:
                 f"{layer}.{table} has no version {version}; "
                 f"available: {self.versions(layer, table)}"
             )
-        return _read_table(spark, vdir)  # applies the snapshot's own sidecar
+        return vdir
 
     def version_changes(
         self,
@@ -1455,28 +1290,18 @@ class Lake:
         snapshot's files and swaps — zero bytes copied, crash-recovered
         like every other mutation, and the snapshot itself stays intact
         (restore is a read of history, not a consumption of it)."""
-        if (version is None) == (as_of is None):
-            raise ValueError("pass exactly one of version= or as_of=")
-        if as_of is not None:
-            version = self.resolve_as_of(layer, table, as_of)
-        path = self.path(layer, table)
-        vdir = os.path.join(self._versions_root(layer, table), f"v={version}")
-        if not os.path.isdir(vdir):
-            raise ValueError(
-                f"{layer}.{table} has no version {version}; "
-                f"available: {self.versions(layer, table)}"
-            )
-        _recover_swap(path, "__restoring", "__prerestore")
-        stage = path + "__restoring"
-        for rel in _data_file_rels(vdir):
-            dst = os.path.join(stage, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.link(os.path.join(vdir, rel), dst)
-        os.makedirs(stage, exist_ok=True)  # empty snapshot restores too
+        vdir = self._version_dir(layer, table, version, as_of)
         # the SNAPSHOT's schema state (sidecar or none) is what restores:
-        # rolling back past an evolution rolls the added columns back too
-        _carry_schema(vdir, stage)
-        _atomic_swap(path, stage, path + "__prerestore")
+        # rolling back past an evolution rolls the added columns back too;
+        # the live ledger stays (restored data does not un-apply batches)
+        _commit(
+            None,
+            _enter(self.path(layer, table), "restore"),
+            "restore",
+            lambda stage: None,
+            src=vdir,
+            keep=_data_file_rels(vdir),
+        )
 
     def history(self, layer: str, table: str) -> list[dict]:
         """DESCRIBE HISTORY: per snapshot, the epoch-microsecond commit
@@ -1487,52 +1312,34 @@ class Lake:
         footer), so an ADD-COLUMN evolution is visible in the history as
         the version where the count grew. The live table appears as
         version ``None`` (no commit timestamp)."""
-        import pyarrow.parquet as pq
 
         def stat(d: str) -> tuple[int, int, int | None]:
             rels = _data_file_rels(d)
+            mds = _footer_metadata(d, rels)
             sj = _read_schema_json(d)
             if sj is not None:
                 ncols = len(_schema_from_json(sj).fields)
             elif rels:
                 # non-evolved: every footer agrees, any file's schema works
-                ncols = len(
-                    pq.ParquetFile(os.path.join(d, rels[-1])).schema_arrow.names
-                )
+                ncols = len(mds[-1].schema.to_arrow_schema().names)
             else:
                 ncols = None
-            return (
-                len(rels),
-                sum(
-                    pq.ParquetFile(os.path.join(d, r)).metadata.num_rows
-                    for r in rels
-                ),
-                ncols,
-            )
+            return len(rels), sum(md.num_rows for md in mds), ncols
 
         root = self._versions_root(layer, table)
+        dirs = [(n, os.path.join(root, f"v={n}")) for n in self.versions(layer, table)]
         out = []
-        for n in self.versions(layer, table):
-            files, rows, ncols = stat(os.path.join(root, f"v={n}"))
+        for n, d in dirs + [(None, self.path(layer, table))]:
+            files, rows, ncols = stat(d)
             out.append(
                 {
                     "version": n,
-                    "committed_us": self._commit_us(layer, table, n),
+                    "committed_us": None if n is None else self._commit_us(layer, table, n),
                     "files": files,
                     "rows": rows,
                     "n_columns": ncols,
                 }
             )
-        files, rows, ncols = stat(self.path(layer, table))
-        out.append(
-            {
-                "version": None,
-                "committed_us": None,
-                "files": files,
-                "rows": rows,
-                "n_columns": ncols,
-            }
-        )
         return out
 
     @_serialized
@@ -1664,7 +1471,7 @@ class Lake:
 
         path = self.path(layer, table)
         removed, restored = [], False
-        for tmp, old in _SWAP_SUFFIXES:
+        for tmp, old in _SWAP_SUFFIXES.values():
             pre = [d for d in (path + tmp, path + old) if os.path.exists(d)]
             if pre and not os.path.exists(path):
                 # the stranded pre-swap copy BECOMES the live table — it
@@ -1722,25 +1529,16 @@ class Lake:
 
         Same atomic tmp-dir swap as :meth:`compact`.
         """
-        import math
-
-        path = self.path(layer, table)
-        _recover_swap(path, "__clustering", "__precluster")
-        idx_cols = _indexed_cols(path)
+        path = _enter(self.path(layer, table), "cluster")
         lead = cols[0]
-        before_files, before_bytes = _file_stats(path)
         amp_before = _read_amplification(path, lead)
-        df = _read_table(spark, path)  # full rewrite bakes an evolved schema in
-        rows = df.count()
-        total_mb = max(before_bytes / 1e6, 1e-3)
-        n_tasks = max(1, math.ceil(total_mb / target_file_mb))
-        rows_per_file = max(1, int(rows * target_file_mb / total_mb))
-        out = df.repartitionByRange(n_tasks, *cols).sortWithinPartitions(*cols)
-        tmp = path + "__clustering"
-        out.write.mode("overwrite").option("maxRecordsPerFile", rows_per_file).parquet(tmp)
-        for c in idx_cols:  # rebuild INTO the stage: the index rides the swap
-            _build_index_at(spark, tmp, c, 0.01)
-        _atomic_swap(path, tmp, path + "__precluster")
+        rows, before_files, _before_bytes = _rewrite(
+            spark,
+            path,
+            "cluster",
+            target_file_mb,
+            lambda df, n: df.repartitionByRange(n, *cols).sortWithinPartitions(*cols),
+        )
         after_files, _after_bytes = _file_stats(path)
         return {
             "table": f"{layer}.{table}",
@@ -1780,50 +1578,41 @@ class Lake:
         the report quantifies it as per-column read amplification
         before/after, from parquet footers only.
         """
-        import math
-
-        path = self.path(layer, table)
-        _recover_swap(path, "__clustering", "__precluster")
-        idx_cols = _indexed_cols(path)
-        before_files, before_bytes = _file_stats(path)
+        path = _enter(self.path(layer, table), "cluster")
         amp_before = {c: _read_amplification(path, c) for c in cols}
-        df = _read_table(spark, path)  # full rewrite bakes an evolved schema in
-        rows = df.count()
         nq = 1 << bits
         probs = [i / nq for i in range(1, nq)]
-        proj = df.select(
-            "*", *[F.col(c).cast("double").alias(f"_zd_{c}") for c in cols]
-        )
+
         def _bucket_pred(cname):
             # closure, not a default arg: a 2-parameter lambda would be
             # read by F.filter as (element, index)
             return lambda b: b <= F.col(f"_zd_{cname}")
 
-        buckets = []
-        for c in cols:
-            bounds = proj.stat.approxQuantile(f"_zd_{c}", probs, 1.0 / (4 * nq))
-            arr = F.array(*[F.lit(float(b)) for b in bounds])
-            # bucket = count of boundaries <= value (0..2^bits-1)
-            buckets.append(F.size(F.filter(arr, _bucket_pred(c))))
-        z = F.lit(0).cast("long")
-        for i in range(bits):
-            for ci, b in enumerate(buckets):
-                bit = F.shiftright(b, i).bitwiseAND(F.lit(1)).cast("long")
-                z = z.bitwiseOR(F.shiftleft(bit, i * len(cols) + ci))
-        total_mb = max(before_bytes / 1e6, 1e-3)
-        n_tasks = max(1, math.ceil(total_mb / target_file_mb))
-        rows_per_file = max(1, int(rows * target_file_mb / total_mb))
-        out = (
-            proj.withColumn("_z", z)
-            .repartitionByRange(n_tasks, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z", *[f"_zd_{c}" for c in cols])
+        def zorder(df: DataFrame, n_tasks: int) -> DataFrame:
+            proj = df.select(
+                "*", *[F.col(c).cast("double").alias(f"_zd_{c}") for c in cols]
+            )
+            buckets = []
+            for c in cols:
+                bounds = proj.stat.approxQuantile(f"_zd_{c}", probs, 1.0 / (4 * nq))
+                arr = F.array(*[F.lit(float(b)) for b in bounds])
+                # bucket = count of boundaries <= value (0..2^bits-1)
+                buckets.append(F.size(F.filter(arr, _bucket_pred(c))))
+            z = F.lit(0).cast("long")
+            for i in range(bits):
+                for ci, b in enumerate(buckets):
+                    bit = F.shiftright(b, i).bitwiseAND(F.lit(1)).cast("long")
+                    z = z.bitwiseOR(F.shiftleft(bit, i * len(cols) + ci))
+            return (
+                proj.withColumn("_z", z)
+                .repartitionByRange(n_tasks, "_z")
+                .sortWithinPartitions("_z")
+                .drop("_z", *[f"_zd_{c}" for c in cols])
+            )
+
+        rows, before_files, _before_bytes = _rewrite(
+            spark, path, "cluster", target_file_mb, zorder
         )
-        tmp = path + "__clustering"
-        out.write.mode("overwrite").option("maxRecordsPerFile", rows_per_file).parquet(tmp)
-        for c in idx_cols:  # rebuild INTO the stage: the index rides the swap
-            _build_index_at(spark, tmp, c, 0.01)
-        _atomic_swap(path, tmp, path + "__precluster")
         after_files, _after_bytes = _file_stats(path)
         return {
             "table": f"{layer}.{table}",
@@ -1899,12 +1688,7 @@ class Lake:
         files = _key_envelopes(path, col)
         key_vals = sorted(set(keys))
         cands = [f for f in files if _envelope_hits(f[2], f[3], key_vals)]
-        idx = None
-        try:
-            with open(os.path.join(path, f"_file_bloom_{col}.json")) as fh:
-                idx = json.load(fh)
-        except OSError:
-            pass
+        idx = _read_index(path, col)
         if idx:
             m, k = idx["m"], idx["k"]
             # xxhash64 is TYPE-sensitive (int and bigint hash differently):
@@ -1972,19 +1756,20 @@ def _as_of_us(as_of) -> int:
     return int(dt.timestamp() * 1_000_000)
 
 
-#: (stage, old) directory-suffix pairs of every atomic-swap mutation —
-#: the recovery sweep each mutation runs for itself on entry, and the
-#: whole-table list `Lake.vacuum` / `Lake.expire_snapshots` sweep.
-_SWAP_SUFFIXES = (
-    ("__compacting", "__precompact"),
-    ("__clustering", "__precluster"),
-    ("__purging", "__prepurge"),
-    ("__merging", "__premerge"),
-    ("__scd2merging", "__prescd2merge"),
-    ("__replacing", "__prereplace"),
-    ("__upserting", "__preupsert"),
-    ("__restoring", "__prerestore"),
-)
+#: (stage, old) directory-suffix pair per mutation kind — the recovery
+#: sweep each mutation runs for its own kind on entry (:func:`_enter`),
+#: the stage/old dirs :func:`_commit` swaps through, and the whole-table
+#: list `Lake.vacuum` / `Lake.expire_snapshots` sweep.
+_SWAP_SUFFIXES = {
+    "compact": ("__compacting", "__precompact"),
+    "cluster": ("__clustering", "__precluster"),
+    "purge": ("__purging", "__prepurge"),
+    "merge": ("__merging", "__premerge"),
+    "scd2merge": ("__scd2merging", "__prescd2merge"),
+    "replace": ("__replacing", "__prereplace"),
+    "upsert": ("__upserting", "__preupsert"),
+    "restore": ("__restoring", "__prerestore"),
+}
 
 #: Sidecar file recording batch ids already merged into a table — the
 #: exactly-once memory for streaming consumers (`merge_scd2(batch_id=)`,
@@ -2009,25 +1794,18 @@ def _schema_from_json(schema_json: str):
     return StructType.fromJson(json.loads(schema_json))
 
 
-def _write_schema_json(dirpath: str, schema_json: str) -> None:
+def _write_json_atomic(dirpath: str, name: str, obj) -> None:
+    """Write a sidecar (ledger, schema, bloom index) via temp file +
+    rename, so a reader never sees a half-written one."""
     os.makedirs(dirpath, exist_ok=True)
-    tmp = os.path.join(dirpath, f".{_SCHEMA}.tmp")
+    tmp = os.path.join(dirpath, f".{name}.tmp")
     with open(tmp, "w") as f:
-        json.dump({"schema_json": schema_json}, f)
-    os.rename(tmp, os.path.join(dirpath, _SCHEMA))
+        json.dump(obj, f)
+    os.rename(tmp, os.path.join(dirpath, name))
 
 
-def _carry_schema(src: str, stage: str) -> None:
-    """Copy the evolved-schema sidecar into a staged rewrite that
-    hard-links pre-evolution files (purge/merge/upsert) — those files
-    still lack the added columns, so the staged tree needs the sidecar
-    too. Full rewrites (compact, cluster_by) deliberately DON'T carry
-    it: they read schema-aware and write every row, baking the evolved
-    schema into the physical files — compaction is also schema
-    compaction."""
-    sj = _read_schema_json(src)
-    if sj is not None:
-        _write_schema_json(stage, sj)
+def _write_schema_json(dirpath: str, schema_json: str) -> None:
+    _write_json_atomic(dirpath, _SCHEMA, {"schema_json": schema_json})
 
 
 def _read_table(spark: SparkSession, path: str, files: list[str] | None = None):
@@ -2187,21 +1965,7 @@ def _read_ledger(path: str) -> _Ledger:
 
 
 def _write_ledger_atomic(path: str, applied: _Ledger) -> None:
-    tmp = os.path.join(path, f".{_LEDGER}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(applied.to_json(), f)
-    os.rename(tmp, os.path.join(path, _LEDGER))
-
-
-def _rescue_ledger(old: str, path: str) -> None:
-    """Carry the applied-batch ledger across a mutation that did not
-    update it itself (compact, cluster_by, purge_keys, merge_changes
-    rebuild the table from a Spark read, which never sees the sidecar),
-    so a rewrite between streamed batches does not erase the
-    exactly-once memory."""
-    src, dst = os.path.join(old, _LEDGER), os.path.join(path, _LEDGER)
-    if os.path.exists(src) and not os.path.exists(dst) and os.path.isdir(path):
-        os.rename(src, dst)
+    _write_json_atomic(path, _LEDGER, applied.to_json())
 
 
 def _recover_swap(path: str, tmp_suffix: str, old_suffix: str) -> None:
@@ -2218,8 +1982,6 @@ def _recover_swap(path: str, tmp_suffix: str, old_suffix: str) -> None:
         os.rename(old, path)
     for d in (tmp, old):
         if os.path.exists(d) and os.path.exists(path):
-            if d == old:
-                _rescue_ledger(d, path)
             shutil.rmtree(d)
 
 
@@ -2232,8 +1994,131 @@ def _atomic_swap(path: str, tmp: str, old: str) -> None:
 
     os.rename(path, old)
     os.rename(tmp, path)
-    _rescue_ledger(old, path)
     shutil.rmtree(old)
+
+
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    target_file_mb: int,
+    layout,
+    partition_by: tuple[str, ...] = (),
+) -> tuple[int, int, int]:
+    """The FULL rewrite behind compact, cluster_by and cluster_by_zorder,
+    which differ only in ``layout(df, n_tasks)``, the row ordering (see
+    :meth:`Lake.compact` for the sizing). The schema-aware read bakes an
+    evolved schema into the files; the bloom indexes are rebuilt into
+    the stage. Returns ``(rows, files_before, bytes_before)``."""
+    import math
+
+    before_files, before_bytes = _file_stats(path)
+    df = _read_table(spark, path)
+    rows = df.count()
+    total_mb = max(before_bytes / 1e6, 1e-3)
+    n_tasks = max(1, math.ceil(total_mb / target_file_mb))
+    rows_per_file = max(1, int(rows * target_file_mb / total_mb))
+    out = layout(df, n_tasks)
+    _commit(
+        spark,
+        path,
+        kind,
+        lambda stage: _writer(out, partition_by)
+        .option("maxRecordsPerFile", rows_per_file)
+        .parquet(stage),
+        reindex=_indexed_cols(path),
+    )
+    return rows, before_files, before_bytes
+
+
+def _unchanged(audit: dict, rows: int, **extra) -> dict:
+    """Audit of a MERGE that rewrote nothing (replay or empty batch)."""
+    return {**audit, "files_rewritten": 0, "rows_before": rows, "rows_after": rows, **extra}
+
+
+def _enter(path: str, kind: str) -> str:
+    """A mutation's entry: repair whatever a crashed mutation of the
+    same ``kind`` left behind (:func:`_recover_swap`), return ``path``."""
+    _recover_swap(path, *_SWAP_SUFFIXES[kind])
+    return path
+
+
+def _link_files(src: str, dst: str, rels) -> None:
+    """Hard-link each data file ``rel`` of ``src`` into ``dst`` at the
+    same relative path: byte-identical (same inode, same mtime), no data
+    movement. Spark part-file names are UUID-suffixed, so linked files
+    never collide with freshly written ones. ``dst`` exists afterwards
+    even when ``rels`` is empty (an empty table links to an empty tree)."""
+    for rel in rels:
+        target = os.path.join(dst, rel)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        os.link(os.path.join(src, rel), target)
+    os.makedirs(dst, exist_ok=True)
+
+
+def _writer(df: DataFrame, partition_by=()):
+    """Overwrite-mode parquet writer, hive-partitioned when asked."""
+    w = df.write.mode("overwrite")
+    return w.partitionBy(*partition_by) if partition_by else w
+
+
+def _commit(
+    spark: SparkSession | None,
+    path: str,
+    kind: str,
+    write,
+    *,
+    src: str | None = None,
+    keep=(),
+    ledger: _Ledger | None = None,
+    schema_json: str | None = None,
+    reindex=(),
+) -> int:
+    """The one way a Lake mutation publishes: build the new table in
+    the ``kind``'s stage dir, let every sidecar ride it, swap it in.
+
+    1. ``write(stage)`` — the mutation's single staged Spark write (a
+       no-op for a pure relink such as :meth:`Lake.restore_version`);
+    2. the newly written rows, counted from footers (:func:`_stage_rows`)
+       before anything is linked — this is the return value;
+    3. with ``src`` (the live table, or a snapshot): hard-link the
+       untouched files ``keep`` from it (:func:`_link_files`);
+    4. the applied-batch ledger: ``ledger`` if the mutation advanced it,
+       else the live table's — so the exactly-once memory survives
+       every mutation, including full rewrites whose Spark read never
+       sees the sidecar;
+    5. the schema sidecar: ``schema_json`` if given, else the one carried
+       from ``src`` (linked files may predate an evolution). Full
+       rewrites pass neither: they bake the schema into the files;
+    6. bloom indexes: the ``reindex`` columns are rebuilt into the
+       stage (full rewrites), a linked rewrite carries every index
+       (:func:`_carry_file_indexes`);
+    7. :func:`_atomic_swap` — or a plain rename when the table does not
+       exist yet (first build: one atomic publish).
+    """
+    tmp_suffix, old_suffix = _SWAP_SUFFIXES[kind]
+    stage = path + tmp_suffix
+    write(stage)
+    new_rows = _stage_rows(stage)  # before the links: new rows only
+    if src is not None:
+        _link_files(src, stage, keep)
+    led = ledger if ledger is not None else _read_ledger(path)
+    if led:
+        _write_ledger_atomic(stage, led)
+    if schema_json is None and src is not None:
+        schema_json = _read_schema_json(src)
+    if schema_json is not None:
+        _write_schema_json(stage, schema_json)
+    for col in reindex:
+        idx = _read_index(path, col) or {}
+        _build_index_at(spark, stage, col, idx.get("fpp", 0.01))
+    if src is not None:
+        _carry_file_indexes(spark, path, stage, set(keep))
+    if os.path.isdir(path):
+        _atomic_swap(path, stage, path + old_suffix)
+    else:
+        os.rename(stage, path)
+    return new_rows
 
 
 def _data_file_rels(path: str) -> list[str]:
@@ -2289,22 +2174,17 @@ def _footer_metadata(path: str, rels: list[str]):
 
 
 def _key_envelopes(path: str, col: str) -> list[tuple]:
-    """Per data file: ``(relpath, num_rows, min, max)`` of ``col`` from
-    parquet footers only (no data read). ``min``/``max`` are ``None`` —
-    meaning "assume the file can contain anything" — when the column has
-    no usable stats; when ``col`` is a hive partition column its exact
-    value is parsed from the directory name instead."""
-    return [
-        (rel, rows, envs[0][0], envs[0][1])
-        for rel, rows, envs in _key_envelopes_multi(path, (col,))
-    ]
+    """Per data file: ``(relpath, num_rows, min, max)`` of ``col`` — the
+    single-column face of :func:`_key_files`."""
+    return _key_files(path, (col,))[0]
 
 
 def _key_envelopes_multi(path: str, cols: tuple[str, ...]) -> list[tuple]:
     """Per data file: ``(relpath, num_rows, [(min, max) per col])`` from
-    ONE parquet-footer read per file — the multi-column face of
-    :func:`_key_envelopes`, for composite-key merges that intersect
-    envelope prunes across key columns.
+    ONE parquet-footer read per file (no data read). ``min``/``max`` are
+    ``None`` — "assume the file can contain anything" — when a column
+    has no usable stats; a hive partition column's exact value is
+    parsed from the directory name instead.
 
     Hive partition-dir values are PERCENT-DECODED: Spark escapes
     special characters when writing the directory name (``a:b`` →
@@ -2381,34 +2261,68 @@ def _collect_key_vals(keys_df: DataFrame, col: str) -> list:
     )
 
 
-def _affected_rels_distributed(
-    spark: SparkSession, files: list[tuple], keys_df: DataFrame
-) -> set[str]:
-    """Footer-envelope file prune for a LARGE batch, without collecting
-    its keys: join the batch's distinct keys against a file-envelope
-    DataFrame (one metadata row per data file) and collect only the hit
-    RELPATHS — file-count-bounded, never key-count-bounded. The
-    envelope frame broadcasts (it is tiny); the keys stream through it
-    distributed, so driver memory holds file metadata only — the same
-    metadata-side prune Delta/Iceberg run against their file stats.
+def _key_files(path: str, key_cols: tuple[str, ...]) -> list[list[tuple]]:
+    """The envelope walk every key-pruned mutation starts from: per key
+    column, per data file ``(relpath, rows, min, max)`` — one footer
+    read per file for all columns (:func:`_key_envelopes_multi`). Entry
+    0 is the lead column's and doubles as the table's file list."""
+    multi = _key_envelopes_multi(path, key_cols)
+    return [
+        [(rel, rows, *envs[i]) for rel, rows, envs in multi]
+        for i in range(len(key_cols))
+    ]
 
-    Matches :func:`_envelope_hits`' conservatism: files without usable
-    stats — or whose stats don't CAST to the key type (the hive
-    partition-dir string case) — are always affected. ``keys_df`` is a
-    single-column frame of the LEAD key."""
-    frame, no_stats = _distributed_prune_frame(spark, files, keys_df)
-    if frame is None:
-        return no_stats
-    return no_stats | {r["_rel"] for r in frame.collect()}
+
+def _hit_rels(
+    spark: SparkSession,
+    files_by_dim: list[list[tuple]],
+    key_cols: tuple[str, ...],
+    keys_df: DataFrame,
+    large: bool,
+) -> set[str]:
+    """Relpaths of the files that may hold a key of ``keys_df`` — the
+    footer-envelope prune shared by purge_keys, merge_changes and
+    merge_scd2. Composite keys prune on EVERY key column with usable
+    stats, hit sets intersected: each dimension's prune is independently
+    conservative (a file excluded by ANY dimension cannot hold any
+    touched key tuple), so a low-cardinality lead key still prunes when
+    a later key is selective. Later columns whose files are all
+    stat-less are skipped (their pass would hit everything and refine
+    nothing). ``large`` picks the distributed path
+    (:func:`_distributed_prune_frame`, the keys never reach the driver)
+    over the broadcast one (:func:`_collect_key_vals`)."""
+    hit: set[str] = set()
+    for i, files in enumerate(files_by_dim):
+        if i and not any(f[2] is not None and f[3] is not None for f in files):
+            continue
+        if large:
+            frame, dim = _distributed_prune_frame(
+                spark, files, keys_df.select(key_cols[i])
+            )
+            if frame is not None:
+                dim = dim | {r["_rel"] for r in frame.collect()}
+        else:
+            vals = _collect_key_vals(keys_df, key_cols[i])
+            dim = {f[0] for f in files if _envelope_hits(f[2], f[3], vals)}
+        hit = dim if i == 0 else hit & dim
+        if not hit:
+            break
+    return hit
 
 
 def _distributed_prune_frame(
     spark: SparkSession, files: list[tuple], keys_df: DataFrame
 ) -> tuple[DataFrame | None, set[str]]:
-    """Build the distributed envelope-prune job for
-    :func:`_affected_rels_distributed` (returned un-executed so plan
-    tests can assert its shape): ``(hit-relpath frame | None,
-    conservative no-stats relpaths)``.
+    """The distributed envelope prune of a LARGE batch (``_hit_rels``'
+    ``large`` path): join the batch's distinct keys (``keys_df``, one
+    column) against a file-envelope DataFrame (one metadata row per data
+    file) so only hit RELPATHS reach the driver — file-count-bounded,
+    never key-count-bounded, the metadata-side prune Delta/Iceberg run
+    against their file stats. Returned un-executed so plan tests can
+    assert its shape: ``(hit-relpath frame | None, conservative no-stats
+    relpaths)`` — files whose stats are missing or don't CAST to the key
+    type (the hive partition-dir string case) are always affected,
+    matching :func:`_envelope_hits`.
 
     The envelope join is a broadcast nested loop (range predicate):
     |probe| × |files| comparisons, so the probe side is COARSENED
@@ -2544,23 +2458,17 @@ def _read_amplification(path: str, col: str) -> float | None:
     ``col``: Σ(row-group [min,max] width) / global width, from parquet
     footers only. None when stats are absent or the column isn't
     numeric/orderable, or the global range is degenerate."""
-    import pyarrow.parquet as pq
-
     ranges = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                continue
-            md = pq.ParquetFile(os.path.join(root, f)).metadata
-            try:
-                idx = md.schema.names.index(col)
-            except ValueError:
+    for md in _footer_metadata(path, _data_file_rels(path)):
+        try:
+            idx = md.schema.names.index(col)
+        except ValueError:
+            return None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None or not st.has_min_max:
                 return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                ranges.append((st.min, st.max))
+            ranges.append((st.min, st.max))
     if not ranges:
         return None
     lo = min(r[0] for r in ranges)
@@ -2660,7 +2568,10 @@ def _build_index_at(spark: SparkSession, path: str, col: str, fpp: float) -> dic
     full-rewrite maintenance paths (compact / cluster_by / zorder)
     build the fresh index into their staged tree so it RIDES the atomic
     swap; a crash can then never leave a live table whose index was
-    dropped by the swap but not yet rebuilt (silent pruning decay)."""
+    dropped by the swap but not yet rebuilt (silent pruning decay).
+
+    The index records the per-file row count and ``fpp`` it was sized
+    for, so a linked rewrite can tell when its new files outgrow it."""
     import math
 
     files = _key_envelopes(path, col)
@@ -2669,16 +2580,22 @@ def _build_index_at(spark: SparkSession, path: str, col: str, fpp: float) -> dic
     m = 1 << max(6, (m_raw - 1).bit_length())
     k = min(len(BLOOM_SEEDS), max(1, round(m / max_rows * math.log(2))))
     entries = _bloom_entries(spark, path, None, col, m, k)
-    index = {"col": col, "m": m, "k": k, "files": entries}
-    tmp = os.path.join(path, f"._file_bloom_{col}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(index, f)
-    os.rename(tmp, os.path.join(path, f"_file_bloom_{col}.json"))
+    index = {"col": col, "m": m, "k": k, "rows": max_rows, "fpp": fpp, "files": entries}
+    _write_json_atomic(path, f"_file_bloom_{col}.json", index)
     return {"col": col, "m": m, "k": k, "files_indexed": len(entries)}
 
 
+def _read_index(path: str, col: str) -> dict | None:
+    """The bloom index sidecar of ``col`` under ``path``, or None."""
+    try:
+        with open(os.path.join(path, f"_file_bloom_{col}.json")) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
 def _carry_file_indexes(
-    spark: SparkSession, path: str, stage: str, linked_rels: set[str]
+    spark: SparkSession | None, path: str, stage: str, linked_rels: set[str]
 ) -> None:
     """Maintain per-file bloom indexes (:meth:`Lake.build_file_index`)
     through a file-pruned rewrite, inside the same staged swap: files
@@ -2686,22 +2603,35 @@ def _carry_file_indexes(
     relpath); rewritten/new files get fresh entries scanned with the
     index's existing ``(m, k)``. Point-lookup pruning therefore does
     NOT decay between compactions; cost is O(rewritten files) — the
-    same order as the rewrite itself. The index stays advisory: a new
-    file larger than ``m`` was sized for degrades fpp, never
-    correctness (point_lookup reads unindexed files conservatively and
-    bloom hits are verified by the actual filter)."""
-    for col in _indexed_cols(path):
-        try:
-            with open(os.path.join(path, f"_file_bloom_{col}.json")) as fh:
-                idx = json.load(fh)
-        except (OSError, ValueError):
+    same order as the rewrite itself.
+
+    A new file with more rows than the index was sized for would fill
+    its ``m`` bits past the target fpp (a 4x larger file under ``k=7``
+    reads as "maybe" for most probes, and pruning silently stops), so
+    then the column's index is rebuilt over the whole stage with the
+    recorded ``fpp`` (:func:`_build_index_at`). Indexes from before the
+    size was recorded are carried as they are. Either way the index
+    stays advisory: point_lookup reads unindexed files conservatively
+    and bloom hits are verified by the actual filter."""
+    cols = _indexed_cols(path)
+    if not cols:
+        return
+    new_rels = [r for r in _data_file_rels(stage) if r not in linked_rels]
+    new_max = max(
+        (md.num_rows for md in _footer_metadata(stage, new_rels)), default=0
+    )
+    for col in cols:
+        idx = _read_index(path, col)
+        if idx is None:
+            continue
+        if new_max > idx.get("rows", new_max):
+            _build_index_at(spark, stage, col, idx["fpp"])
             continue
         kept = {
             rel: b64
             for rel, b64 in idx.get("files", {}).items()
             if rel in linked_rels
         }
-        new_rels = [r for r in _data_file_rels(stage) if r not in linked_rels]
         if new_rels:
             kept.update(
                 _bloom_entries(
@@ -2713,22 +2643,14 @@ def _carry_file_indexes(
                     idx["k"],
                 )
             )
-        tmp = os.path.join(stage, f"._file_bloom_{col}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({**idx, "files": kept}, f)
-        os.rename(tmp, os.path.join(stage, f"_file_bloom_{col}.json"))
+        _write_json_atomic(stage, f"_file_bloom_{col}.json", {**idx, "files": kept})
 
 
 def _file_stats(path: str) -> tuple[int, int]:
     """(data file count, total bytes) under a table directory —
     control-plane metadata walk, driver-side by design."""
-    n = b = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                n += 1
-                b += os.path.getsize(os.path.join(root, f))
-    return n, b
+    rels = _data_file_rels(path)
+    return len(rels), sum(os.path.getsize(os.path.join(path, r)) for r in rels)
 
 
 def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
@@ -2776,9 +2698,7 @@ def forget_users_report(
     from dataengineeringpipeline_spark.functions import money_sum
 
     if lake is None:
-        import tempfile
-
-        lake = Lake(tempfile.mkdtemp(prefix="forget_"))
+        lake = Lake(tracked_mkdtemp("forget_"))
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
         "event_id", "user_id", "event_type", F.col("value").cast("double").alias("value")
     )
@@ -2816,16 +2736,15 @@ def forget_users_report(
     ).orderBy("table_name")
 
 
-def lake_cdc_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-contract query: the PHYSICAL lake face of the CDC apply —
-    stage the pre-1999 order snapshot as a key-clustered lake table,
-    :meth:`Lake.merge_changes` the 2001+ shipment changelog into it
-    (file-pruned rewrite + hard-linked untouched files), and read the
-    merged table back. The oracle is the same batch arithmetic as
-    ``scd.cdc_order_snapshot``: a lakehouse MERGE INTO must leave the
-    table exactly as the logical apply computes, or it is wrong."""
-    import tempfile
-
+def _cdc_merged_lake(
+    spark: SparkSession, sf_dir: str, prefix: str, versioned: bool = False, **lake_kw
+) -> tuple[Lake, dict, tuple[int, ...]]:
+    """The CDC fixture shared by the lake contract queries: the pre-1999
+    order snapshot staged key-clustered as ``silver.orders_current`` in
+    a fresh temp lake (removed by ``release_caches``), then the 2001+
+    shipment changelog (``R`` return flag = tombstone) merged into it.
+    ``versioned`` commits a time-travel snapshot before and after the
+    merge. Returns ``(lake, merge audit, snapshot versions)``."""
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     snapshot = orders.filter(
@@ -2848,9 +2767,12 @@ def lake_cdc_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate").cast("date").alias("last_change"),
         F.col("l_linenumber").alias("line_number"),
     )
-    lake = Lake(tempfile.mkdtemp(prefix="cdc_merge_"))
+    lake = Lake(tracked_mkdtemp(prefix), **lake_kw)
     lake.write_clustered(snapshot, "silver", "orders_current", ("order_key",))
-    lake.merge_changes(
+    versions = []
+    if versioned:
+        versions.append(lake.snapshot_version("silver", "orders_current"))
+    audit = lake.merge_changes(
         spark,
         "silver",
         "orders_current",
@@ -2859,6 +2781,20 @@ def lake_cdc_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="last_change",
         tiebreak_cols=("line_number", "op", "status", "total_price"),
     )
+    if versioned:
+        versions.append(lake.snapshot_version("silver", "orders_current"))
+    return lake, audit, tuple(versions)
+
+
+def lake_cdc_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-contract query: the PHYSICAL lake face of the CDC apply —
+    stage the pre-1999 order snapshot as a key-clustered lake table,
+    :meth:`Lake.merge_changes` the 2001+ shipment changelog into it
+    (file-pruned rewrite + hard-linked untouched files), and read the
+    merged table back. The oracle is the same batch arithmetic as
+    ``scd.cdc_order_snapshot``: a lakehouse MERGE INTO must leave the
+    table exactly as the logical apply computes, or it is wrong."""
+    lake, _audit, _versions = _cdc_merged_lake(spark, sf_dir, "cdc_merge_")
     return (
         lake.read(spark, "silver", "orders_current")
         .select("order_key", "status", "total_price", "last_change")
@@ -2874,40 +2810,8 @@ def lake_backfill_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join for kept rows; the driver never holds the key set).
     Shares the batch-apply oracle: the key-path switch must be
     invisible in the data."""
-    import tempfile
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
-    )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
-    )
-    lake = Lake(tempfile.mkdtemp(prefix="backfill_merge_"), merge_broadcast_keys=0)
-    lake.write_clustered(snapshot, "silver", "orders_current", ("order_key",))
-    audit = lake.merge_changes(
-        spark,
-        "silver",
-        "orders_current",
-        changes,
-        key_col="order_key",
-        ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
+    lake, audit, _versions = _cdc_merged_lake(
+        spark, sf_dir, "backfill_merge_", merge_broadcast_keys=0
     )
     assert audit["key_path"] == "distributed", audit
     return (
@@ -2915,6 +2819,33 @@ def lake_backfill_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("order_key", "status", "total_price", "last_change")
         .orderBy("order_key")
     )
+
+
+def _indexed_orders_lake(
+    spark: SparkSession, sf_dir: str, prefix: str, *extra_cols
+) -> tuple[Lake, list]:
+    """The bloom-index fixture of the point-lookup queries: orders
+    (key, status, price, ``extra_cols``) staged UNCLUSTERED as
+    ``silver.orders_flat`` in a fresh temp lake — 16 round-robin files,
+    so every file's key envelope covers every key — with a per-file
+    bloom index on ``order_key``. Returns ``(lake, probe keys)``: the
+    first 8 keys divisible by 997."""
+    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
+        F.col("o_orderkey").alias("order_key"),
+        F.col("o_orderstatus").alias("status"),
+        F.col("o_totalprice").alias("total_price"),
+        *extra_cols,
+    )
+    lake = Lake(tracked_mkdtemp(prefix))
+    lake.write(orders.repartition(16), "silver", "orders_flat")
+    lake.build_file_index(spark, "silver", "orders_flat", "order_key")
+    probe = (
+        orders.filter(F.col("order_key") % 997 == 0)
+        .select("order_key")
+        .orderBy("order_key")
+        .limit(8)
+    )
+    return lake, [r["order_key"] for r in probe.collect()]
 
 
 def lake_indexed_merge_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2926,23 +2857,7 @@ def lake_indexed_merge_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index entries for rewritten files are refreshed inside the merge's
     swap, so the lookup still PRUNES (asserted) and — the oracle — the
     answer equals the plain reconstruction in SQL."""
-    import tempfile
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-    )
-    lake = Lake(tempfile.mkdtemp(prefix="indexed_merge_"))
-    lake.write(orders.repartition(16), "silver", "orders_flat")
-    lake.build_file_index(spark, "silver", "orders_flat", "order_key")
-    probe_df = (
-        orders.filter(F.col("order_key") % 997 == 0)
-        .select("order_key")
-        .orderBy("order_key")
-        .limit(8)
-    )
-    probe = [r["order_key"] for r in probe_df.collect()]
+    lake, probe = _indexed_orders_lake(spark, sf_dir, "indexed_merge_")
     upd = [
         (k, "MERGED", -1.0, "U", 1) for k in probe if k % 2 == 0
     ]
@@ -2978,8 +2893,6 @@ def lake_scd2_merged_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the first batch, then re-derive touched keys over (surviving
     version-openers ∪ new changes) — a lakehouse SCD2 MERGE must leave
     the table exactly as the logical apply computes."""
-    import tempfile
-
     from .scd import scd2_history
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -2998,7 +2911,7 @@ def lake_scd2_merged_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak_cols=["order_key"],
         carry_cols=["order_key"],
     )
-    lake = Lake(tempfile.mkdtemp(prefix="scd2_merge_"))
+    lake = Lake(tracked_mkdtemp("scd2_merge_"))
     lake.write_clustered(hist1, "gold", "priority_history", ("customer_key",))
     lake.merge_scd2(
         spark,
@@ -3037,43 +2950,9 @@ def lake_time_travel_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     and version 2 must equal the CDC-applied state, so the oracle is the
     pre-merge aggregate UNION the post-merge (latest-per-key) aggregate.
     """
-    import tempfile
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
+    lake, _audit, (v1, v2) = _cdc_merged_lake(
+        spark, sf_dir, "time_travel_", versioned=True
     )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
-    )
-    lake = Lake(tempfile.mkdtemp(prefix="time_travel_"))
-    lake.write_clustered(snapshot, "silver", "orders_current", ("order_key",))
-    v1 = lake.snapshot_version("silver", "orders_current")
-    lake.merge_changes(
-        spark,
-        "silver",
-        "orders_current",
-        changes,
-        key_col="order_key",
-        ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
-    )
-    v2 = lake.snapshot_version("silver", "orders_current")
     from .functions import money_sum
 
     # v1 is read back TIMESTAMP AS OF its own commit instant (resolved
@@ -3113,43 +2992,9 @@ def lake_version_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     change is a tombstone; update = both present with a differing
     payload), so the diff-of-snapshots must reproduce the change log it
     never saw."""
-    import tempfile
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
+    lake, _audit, (v1, v2) = _cdc_merged_lake(
+        spark, sf_dir, "version_cdf_", versioned=True
     )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
-    )
-    lake = Lake(tempfile.mkdtemp(prefix="version_cdf_"))
-    lake.write_clustered(snapshot, "silver", "orders_current", ("order_key",))
-    v1 = lake.snapshot_version("silver", "orders_current")
-    lake.merge_changes(
-        spark,
-        "silver",
-        "orders_current",
-        changes,
-        key_col="order_key",
-        ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
-    )
-    v2 = lake.snapshot_version("silver", "orders_current")
     feed = lake.version_changes(
         spark, "silver", "orders_current", v1, v2, ("order_key",)
     )
@@ -3185,8 +3030,6 @@ def lake_schema_evolution_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
     rewrite beyond the merge's own footer-pruned one — the oracle
     reconstructs the merged state in plain SQL, so a pass proves both
     the merge semantics and the sidecar-schema read path."""
-    import tempfile
-
     from .functions import money_sum
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -3226,7 +3069,7 @@ def lake_schema_evolution_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
         .withColumn("op", F.lit("D"))
     )
     changes = ins.unionByName(upd).unionByName(dels)
-    lake = Lake(tempfile.mkdtemp(prefix="schema_evo_"))
+    lake = Lake(tracked_mkdtemp("schema_evo_"))
     lake.write_clustered(snap, "silver", "orders_current", ("order_key",))
     lake.merge_changes(
         spark,
@@ -3257,24 +3100,9 @@ def lake_point_lookup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads a handful of files instead of the table (report asserted in
     tests); the oracle is the plain ``WHERE key IN (...)`` — data
     skipping must never change the answer."""
-    import tempfile
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("order_date"),
+    lake, keys = _indexed_orders_lake(
+        spark, sf_dir, "point_lookup_", F.col("o_orderdate").cast("date").alias("order_date")
     )
-    lake = Lake(tempfile.mkdtemp(prefix="point_lookup_"))
-    lake.write(orders.repartition(16), "silver", "orders_flat")
-    lake.build_file_index(spark, "silver", "orders_flat", "order_key")
-    keys = [
-        r["order_key"]
-        for r in orders.filter(F.col("order_key") % 997 == 0)
-        .orderBy("order_key")
-        .limit(8)
-        .collect()
-    ]
     out, _report = lake.point_lookup(
         spark, "silver", "orders_flat", "order_key", keys
     )
@@ -3290,8 +3118,6 @@ def lake_partial_update_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``total_price`` lands NULL), and aggregate per status. Patched rows
     MUST keep their stored ``total_price``; the oracle reconstructs the
     patch in plain SQL."""
-    import tempfile
-
     from .functions import money_sum
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -3327,7 +3153,7 @@ def lake_partial_update_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("op", F.lit("U"))
         .withColumn("change_ts", F.lit("1998-01-01").cast("date"))
     )
-    lake = Lake(tempfile.mkdtemp(prefix="partial_update_"))
+    lake = Lake(tracked_mkdtemp("partial_update_"))
     lake.write(
         snap.repartitionByRange(8, "order_key").sortWithinPartitions("order_key"),
         "silver",
@@ -3365,45 +3191,11 @@ def lake_retention_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained versions is the result, and the oracle reconstructs the
     post-merge and post-purge states in plain SQL. A pass proves expiry
     removes exactly the expired history and nothing else."""
-    import tempfile
-
     from .functions import money_sum
 
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
+    lake, _audit, (v1, v2) = _cdc_merged_lake(
+        spark, sf_dir, "retention_", versioned=True
     )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
-    )
-    lake = Lake(tempfile.mkdtemp(prefix="retention_"))
-    lake.write_clustered(snapshot, "silver", "orders_current", ("order_key",))
-    v1 = lake.snapshot_version("silver", "orders_current")
-    lake.merge_changes(
-        spark,
-        "silver",
-        "orders_current",
-        changes,
-        key_col="order_key",
-        ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
-    )
-    v2 = lake.snapshot_version("silver", "orders_current")
     optout = (
         lake.read(spark, "silver", "orders_current")
         .select("order_key")

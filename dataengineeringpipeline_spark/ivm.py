@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .cache import tracked_mkdtemp
 from .datalake import Lake
 
 #: Decimal types for the exact partial sums. ``rev`` matches
@@ -1113,8 +1114,6 @@ def incremental_gold_refresh(
     CDC produces (inode-tested in ``test_refresh_customer_analytics_is_
     delta_sized_and_idempotent``)."""
     import os
-    import tempfile
-
     from . import cleaning
 
     silver_customers = cleaning.clean_customers(
@@ -1130,7 +1129,7 @@ def incremental_gold_refresh(
     delta = silver_orders.filter(d >= lit_cut)
 
     def _bootstrap() -> str:
-        blake = Lake(tempfile.mkdtemp(prefix="gold_refresh_boot_"))
+        blake = Lake(tracked_mkdtemp("gold_refresh_boot_"))
         maintain_customer_partials(blake, silver_orders.filter(d < lit_cut))
         initial = customer_analytics_from_partials(
             silver_customers, blake.read(spark, "gold", "customer_partials")
@@ -1243,8 +1242,6 @@ def incremental_rule_summary_table(
     maintained table must equal the one-shot config-driven batch job
     bit-for-bit."""
     import os
-    import tempfile
-
     from . import cleaning
     from .rules import MONTHLY_REVENUE_RULE as rule
 
@@ -1256,7 +1253,7 @@ def incremental_rule_summary_table(
     delta = silver_orders.filter(d >= lit_cut)
 
     def _bootstrap() -> str:
-        blake = Lake(tempfile.mkdtemp(prefix="rule_summary_boot_"))
+        blake = Lake(tracked_mkdtemp("rule_summary_boot_"))
         maintain_rule_partials(blake, silver_orders.filter(d < lit_cut), rule, "order_year")
         blake.write(
             rule_summary_from_partials(
@@ -1453,8 +1450,6 @@ def rule_migration_summary(
     SQL over ALL orders: migrate + refresh must land exactly where a
     from-scratch build of the new config would."""
     import os
-    import tempfile
-
     from . import cleaning
     from .rules import MONTHLY_REVENUE_RULE, AggregateColumn, AggregationRule
 
@@ -1476,7 +1471,7 @@ def rule_migration_summary(
         filters=old.filters,
     )
     def _bootstrap() -> str:
-        blake = Lake(tempfile.mkdtemp(prefix="rule_migrate_boot_"))
+        blake = Lake(tracked_mkdtemp("rule_migrate_boot_"))
         maintain_rule_partials(blake, base, old, "order_year")
         blake.write(
             rule_summary_from_partials(
@@ -1510,8 +1505,6 @@ def large_delta_gold_refresh(spark, sf_dir: str) -> DataFrame:
     ``customer_analytics`` oracle: the key-path switch must be
     invisible in the data."""
     import os
-    import tempfile
-
     from . import cleaning
 
     silver_customers = cleaning.clean_customers(
@@ -1530,7 +1523,7 @@ def large_delta_gold_refresh(spark, sf_dir: str) -> DataFrame:
         # the bootstrap ALSO runs under merge_broadcast_keys=0 (its
         # partials upserts take the distributed path too)
         blake = Lake(
-            tempfile.mkdtemp(prefix="gold_backfill_boot_"), merge_broadcast_keys=0
+            tracked_mkdtemp("gold_backfill_boot_"), merge_broadcast_keys=0
         )
         maintain_customer_partials(blake, silver_orders.filter(d < lit_cut))
         initial = customer_analytics_from_partials(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataengineeringpipeline_spark.cache import tracked_persist
+from dataengineeringpipeline_spark.cache import tracked_mkdtemp, tracked_persist
 from dataengineeringpipeline_spark.operators.dedup import dedup_survivors
 from dataengineeringpipeline_spark.scale import spread
 from dataengineeringpipeline_spark.operators.text import (
@@ -388,9 +388,7 @@ def snapshot_diff_report(
 
     spark = docs.sparkSession
     if lake is None:
-        import tempfile
-
-        lake = Lake(tempfile.mkdtemp(prefix="snapshot_diff_"))
+        lake = Lake(tracked_mkdtemp("snapshot_diff_"))
     docs = spread(_doc_cols(docs), "doc_id")
     losers = tracked_persist(_dedup_losers(docs, dedup_threshold))
     kept = docs.join(F.broadcast(losers), "doc_id", "left_anti")

@@ -14,7 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Local core count: ``$SPARK_GRAFT_CPUS``, else every core of the host.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 # Configuration applied when *we* create the session.  Queries must still
 # run correctly on an externally provided session (the driver passes its

@@ -2589,6 +2589,47 @@ def test_merge_handles_null_keys_on_both_paths(spark, tmp_path):
             key=lambda t: (t[0] is None, t),
         )
         assert got == want, (name, a)
+    # purge_keys (always the broadcast path): a NULL opt-out key removes
+    # nothing, like the left_anti rewrite, and stored NULL-key rows stay
+    optout = spark.createDataFrame([(5,), (None,)], "k long")
+    a = lake.purge_keys(spark, "silver", "t", "k", optout)
+    assert a["rows_removed"] == 1, a
+    got = sorted(
+        map(tuple, lake.read(spark, "silver", "t").collect()),
+        key=lambda t: (t[0] is None, t),
+    )
+    assert got == [t for t in want if t[0] != 5]
+
+
+def test_bloom_index_rebuilt_when_rewrite_outgrows_its_sizing(spark, tmp_path):
+    """A linked rewrite whose new file holds more rows than the bloom
+    index was sized for rebuilds that column's index over the stage:
+    carried as is, an 8000-row file in bits sized for 1000 rows answers
+    "maybe" to most probes and point lookups silently stop pruning."""
+    import json
+    import os
+
+    from dataengineeringpipeline_spark.datalake import Lake, _data_file_rels
+
+    def merge(base, delta):
+        return base.unionByName(delta).groupBy("p", "k").agg(F.sum("v").alias("v"))
+
+    lake = Lake(str(tmp_path))
+    base = spark.createDataFrame(
+        [(i % 4, i, 1.0) for i in range(4000)], "p int, k long, v double"
+    )
+    lake.upsert_partitions(spark, "gold", "t", base, "p", merge)  # 4 x 1000 rows
+    lake.build_file_index(spark, "gold", "t", "k")
+    grow = spark.createDataFrame(
+        [(0, 10_000 + i, 1.0) for i in range(7000)], "p int, k long, v double"
+    )
+    lake.upsert_partitions(spark, "gold", "t", grow, "p", merge)  # p=0: 8000 rows
+    out, rep = lake.point_lookup(spark, "gold", "t", "k", [1, 5, 9])  # all p=1
+    assert rep["files_read"] == 1, rep
+    assert sorted(r["k"] for r in out.collect()) == [1, 5, 9]
+    path = lake.path("gold", "t")
+    idx = json.load(open(os.path.join(path, "_file_bloom_k.json")))
+    assert idx["rows"] == 8000 and set(idx["files"]) == set(_data_file_rels(path))
 
 
 def test_distributed_prune_partition_dir_key(spark, tmp_path, monkeypatch):
@@ -2821,3 +2862,116 @@ def test_expired_version_interrupted_delete_is_invisible(spark, tmp_path):
     rep = lake.vacuum("silver", "t")
     assert any(f".tmp_expired_v{v1}" in r for r in rep["removed"])
     assert not os.path.exists(os.path.join(root, f".tmp_expired_v{v1}"))
+
+
+def _scd2_kw(batch_id):
+    return dict(
+        key_col="k", attr_cols=("attr", "tier"), ts_col="ts",
+        tiebreak_cols=("tb",), carry_cols=("tb",), batch_id=batch_id,
+        evolve_schema=True,
+    )
+
+
+@pytest.fixture(scope="module")
+def merged_b0_lake(spark, tmp_path_factory):
+    """An SCD2 history table with a bloom index on ``k`` and batch
+    ``b-0`` merged in, which evolves the schema with a ``tier``
+    attribute and leaves a snapshot of the merged state. Built once;
+    each test mutates its own copy."""
+    from dataengineeringpipeline_spark.datalake import Lake
+    from dataengineeringpipeline_spark.scd import scd2_history
+
+    lake = Lake(str(tmp_path_factory.mktemp("b0")))
+    hist = scd2_history(
+        spark.createDataFrame(
+            [(i, f"A{i % 3}", float(i % 5), i) for i in range(400)],
+            "k long, attr string, ts double, tb long",
+        ),
+        ["k"], ["attr"], "ts", tiebreak_cols=["tb"], carry_cols=["tb"],
+    )
+    lake.write(hist.repartitionByRange(4, "k").sortWithinPartitions("k"), "gold", "h")
+    lake.build_file_index(spark, "gold", "h", "k")
+    b0 = spark.createDataFrame(
+        [(40, "A1", "GOLD", 99.0, 9001), (5000, "FRESH", "SILVER", 1.0, 9002)],
+        "k long, attr string, tier string, ts double, tb long",
+    )
+    lake.merge_scd2(spark, "gold", "h", b0, **_scd2_kw("b-0"))
+    lake.snapshot_version("gold", "h")
+    return lake, b0, lake.read(spark, "gold", "h").schema.simpleString()
+
+
+_MUTATIONS = {
+    "compact": lambda spark, lake: lake.compact(spark, "gold", "h"),
+    "cluster_by": lambda spark, lake: lake.cluster_by(spark, "gold", "h", ("k",)),
+    "cluster_by_zorder": lambda spark, lake: lake.cluster_by_zorder(
+        spark, "gold", "h", ("k", "tb")
+    ),
+    "purge_keys": lambda spark, lake: lake.purge_keys(
+        spark, "gold", "h", "k", spark.createDataFrame([(3,)], "k long")
+    ),
+    "merge_scd2": lambda spark, lake: lake.merge_scd2(
+        spark, "gold", "h",
+        spark.createDataFrame(
+            [(80, "A2", "BRONZE", 99.0, 9003)],
+            "k long, attr string, tier string, ts double, tb long",
+        ),
+        **_scd2_kw("b-1"),
+    ),
+    "replace_table": lambda spark, lake: lake.replace_table(
+        spark, "gold", "h", lake.read(spark, "gold", "h")
+    ),
+    "restore_version": lambda spark, lake: lake.restore_version(
+        "gold", "h", lake.versions("gold", "h")[-1]
+    ),
+}
+
+
+@pytest.mark.parametrize("mutation", sorted(_MUTATIONS))
+def test_mutation_commit_carries_ledger_index_and_schema(
+    spark, tmp_path, merged_b0_lake, mutation
+):
+    """Every mutation publishes through the one staged commit, so the
+    sidecars survive it: the applied-batch ledger (replaying ``b-0`` is a
+    no-op), the bloom index (present, and point lookups still find every
+    key) and the evolved schema."""
+    import shutil
+
+    from dataengineeringpipeline_spark.datalake import Lake
+
+    src, b0, schema = merged_b0_lake
+    shutil.copytree(src.root, tmp_path / "lake")
+    lake = Lake(str(tmp_path / "lake"))
+    _MUTATIONS[mutation](spark, lake)
+
+    replay = lake.merge_scd2(spark, "gold", "h", b0, **_scd2_kw("b-0"))
+    assert replay.get("skipped_replay") is True, replay
+    keys = set(range(400)) - ({3} if mutation == "purge_keys" else set()) | {5000}
+    out, rep = lake.point_lookup(spark, "gold", "h", "k", sorted(keys))
+    assert rep["bloom_indexed"], rep
+    assert {r["k"] for r in out.select("k").collect()} == keys
+    assert lake.read(spark, "gold", "h").schema.simpleString() == schema
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["lake_point_lookup_orders", "incremental_rule_summary_table", "snapshot_diff_report"],
+)
+def test_release_caches_removes_lake_temp_roots(spark, sf_dir, tmp_path, query):
+    """A consumed lake, IVM or corpus contract query leaves the temp
+    directory as it found it once ``release_caches`` runs: the throwaway
+    lake each one builds is a tracked temp root."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as entrymod
+    from dataengineeringpipeline_spark.cache import release_caches
+
+    # the JVM unpacks its parquet codec's native library into the temp
+    # directory once per process, on first use: do that before looking
+    spark.range(1).write.parquet(str(tmp_path / "codec_warmup"))
+    tmp = tempfile.gettempdir()
+    release_caches()
+    before = set(os.listdir(tmp))
+    assert entrymod.queries()[query](spark, sf_dir).collect()
+    release_caches()
+    assert set(os.listdir(tmp)) - before == set()

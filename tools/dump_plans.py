@@ -22,10 +22,11 @@ def main() -> int:
     names = sys.argv[2:]
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from dataengineeringpipeline_spark.cache import release_caches
-    from dataengineeringpipeline_spark.session import get_spark
+    from dataengineeringpipeline_spark.session import DEFAULT_CPUS, get_spark
+
+    cpus = DEFAULT_CPUS
 
     spark = get_spark(app_name="dep-spark-plans", cpus=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

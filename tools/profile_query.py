@@ -5,7 +5,7 @@ with wall time, description, and stage-level shuffle/task metrics from
 the local UI REST API.
 
 Usage: python tools/profile_query.py <query> [reps]
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: every core).
 """
 
 from __future__ import annotations
@@ -29,10 +29,11 @@ def main() -> int:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from dataengineeringpipeline_spark.cache import release_caches
-    from dataengineeringpipeline_spark.session import get_spark
+    from dataengineeringpipeline_spark.session import DEFAULT_CPUS, get_spark
+
+    cpus = DEFAULT_CPUS
 
     spark = get_spark(app_name=f"profile-{name}", cpus=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -26,10 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from dataengineeringpipeline_spark.cache import release_caches
-    from dataengineeringpipeline_spark.session import get_spark
+    from dataengineeringpipeline_spark.session import DEFAULT_CPUS, get_spark
+
+    cpus = DEFAULT_CPUS
 
     spark = get_spark(app_name="dep-scale-probe", cpus=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
