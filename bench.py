@@ -1,63 +1,27 @@
 #!/usr/bin/env python3
 """Benchmark harness: runs every declared query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+JSON line of full detail, which it also writes to BENCH_DETAIL.json,
+then a compact summary as the final line ($SPARK_GRAFT_CPUS defaults to
+every core):
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "all_queries_wall", "value": N, "unit": "sec", ..., "queries": {...}}
 
 Each query is forced end-to-end with the ``noop`` sink (full execution,
-no collect-to-driver cost, no disk write skew). A JVM warm-up job runs
-first so the measurement isn't dominated by classloading.
+no collect-to-driver cost, no disk write skew). An untimed warm-up (one
+JVM job, one Python-worker job) runs before timing and again at the
+start of every sweep, so neither classloading nor a Python worker spawn
+is billed to the first query that needs it.
 
 Per-query time is the MIN across up to $SPARK_GRAFT_REPS full sweeps
-(default 3): single-shot timings on this box vary 30-50% run-to-run
-(JIT, page cache, GC pauses, ambient CPU steal), which made
-round-over-round comparisons chase noise — e.g. round 1 recorded
-supplier_performance at 7.7s where its steady state is ~1.2s, and the
-round-5 record whipsawed a false +19% regression out of 2-sweep
-medians at 6× higher steal. The minimum is the classic noise-floor
-(steady-state) estimator: ambient interference only ever ADDS time, so
-the smallest observed sample is the closest to the code's true cost,
-and it converges with 2 sweeps where a median needs 3+. Medians and
-every raw per-sweep sample are retained in BENCH_DETAIL.json.
-Repetition happens at SWEEP granularity under a wall-clock budget
-($SPARK_GRAFT_BUDGET_S, default 1000): the first sweep always completes
-(worst case ≡ the old single-shot bench), additional sweeps run only
-while budget remains, so a driver-side timeout can't be blown by the
-repetitions. The default budget is sized so all 3 sweeps fit at the
-current suite size (~230s/sweep at 176 queries — raised 700→1000 in
-round 8 when the suite grew by 11 lake/IVM lifecycle queries): round
-7's 420s default cut the run to 2 sweeps, which biased min-of-sweeps high and made 155 unchanged
-queries read ~8.5% "slower" — pure estimator noise the third sweep
-exists to remove. "value" is the wall-clock of everything run; "queries"
-holds the per-query minima; "sweeps" says how many sweeps they cover.
-
-Round 10 adds REGIME INSTRUMENTATION (the round-9 record showed 1.22x
-on untouched code — a host fast/slow-phase draw that cost the round its
-comparability and needed hand re-probes to adjudicate): a fixed
-two-probe calibration (md5 codegen query + Arrow/numpy kernel) timed at
-every sweep start and at the end, and a re-probe of the worst
-cross-round movers. Both land in BENCH_DETAIL.json ("calibration",
-"reprobe") and the head line carries "calibration_drift" — a slow-regime
-draw is identifiable from the artifact alone.
-
-Round 11 fixes the two holes that made the round-10 reprobe whiff:
-
-1. BASELINE: movers are now ranked against the PRIOR ROUND's committed
-   driver record (the highest-numbered BENCH_r*.json, ``parsed.queries``
-   — the ~50 slowest per-query minima, exactly the set a judge can
-   compare across rounds), never against the last-written
-   BENCH_DETAIL.json. The round-10 reprobe baselined on a same-day,
-   same-regime detail file, so the real cross-round movers (the minhash
-   family at 2-3x vs round 9) were never selected.
-2. FRESH PROCESS: the reprobe runs in a SUBPROCESS with its own JVM
-   (``bench.py --reprobe-child``). The host's fast/slow regime is
-   process-scoped (CHANGELOG round 6), so an in-process reprobe
-   inherits whatever regime inflated the recording and reads back its
-   own minima. The child warms up, runs each mover twice (first run
-   pays codegen compile; min-of-2 matches the min-of-sweeps estimator),
-   and reports on stdout. reprobe_s ≈ prev_min ⇒ regime artifact;
-   reprobe_s ≈ recorded_min ⇒ real regression.
+(default 3). Ambient interference (JIT, page cache, GC pauses, CPU
+steal) only ever adds time, so the smallest sample is the closest to
+the code's steady-state cost. Medians and every raw per-sweep sample
+are kept in the detail record. The first sweep always completes;
+further sweeps run only while the wall-clock budget
+$SPARK_GRAFT_BUDGET_S (default 1000) remains. "value" is the wall clock
+of all sweeps, "sweeps" how many ran, and "cpu_steal_pct" the host's
+CPU-steal share over them.
 """
 
 from __future__ import annotations
@@ -69,210 +33,23 @@ import sys
 import time
 
 
-def _touch_numpy(batches):
-    import numpy  # noqa: F401  (import cost is the warm-up target)
+def _warm_up(spark, cpus: int) -> None:
+    """Untimed JVM and Python-worker warm-up. Executors reap idle Python
+    workers, and mapInPandas queries pay a per-core worker spawn plus a
+    numpy import on first use (measured: ~6 s billed to the first Arrow
+    query of a sweep without this)."""
 
-    yield from batches
+    # nested, so it is pickled by value: a Python worker started outside
+    # the repo root (tools/ run from elsewhere) cannot import ``bench``
+    def _touch_numpy(batches):
+        import numpy  # noqa: F401  (import cost is the warm-up target)
 
+        yield from batches
 
-def _matmul_probe(batches):
-    """Fixed-size numpy kernel for the calibration probe: measures the
-    host's Arrow/python-worker/SIMD regime, independent of any query."""
-    import numpy as np
-
-    for b in batches:
-        a = np.arange(256 * 256, dtype=np.float32).reshape(256, 256)
-        for _ in range(8):
-            a = (a @ a.T) % 1e6 + 1.0
-        b["id"] = b["id"] + int(a[0, 0]) % 2
-        yield b
-
-
-def _calibrate(spark, cpus: int) -> dict:
-    """Two fixed probes timed back-to-back: an md5-expression query
-    (JVM whole-stage-codegen + hash throughput — the knob the box's
-    fast/slow regime visibly moves) and an Arrow/numpy kernel (python
-    worker + SIMD regime). Identical work every call, so any drift
-    between readings is HOST state, not code: a bench record whose
-    calibration drifts >1.5x between sweeps is machine-flagged as a
-    degraded-regime draw without needing a judge-side rerun."""
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    spark.range(3_000_000).select(
-        F.md5(F.concat_ws("-", "id", "id")).alias("h")
-    ).filter(F.col("h").startswith("a")).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    md5_s = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    spark.range(cpus * 4).repartition(cpus).mapInPandas(
-        _matmul_probe, "id long"
-    ).write.mode("overwrite").format("noop").save()
-    return {"md5_s": round(md5_s, 3), "arrow_s": round(time.perf_counter() - t0, 3)}
-
-
-def _prior_round_minima(repo_dir: str, sf: float) -> tuple[dict[str, float], str]:
-    """Per-query minima from the prior round's committed driver record.
-
-    The driver commits BENCH_r{NN}.json each round with ``parsed.queries``
-    = the slowest ~50 per-query minima of that round's run. That is the
-    only baseline that is (a) guaranteed cross-ROUND and (b) the exact
-    set a judge compares between round records — a BENCH_DETAIL.json on
-    disk may be a same-round, same-regime builder run (round 10's was,
-    which is why its reprobe missed every real mover). Returns
-    ({} , "") when no same-scale prior record exists.
-    """
-    import glob
-    import re
-
-    best_n, best_path = -1, ""
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
-        if m:
-            n = int(m.group(1))
-            if n > best_n:
-                best_n, best_path = n, path
-    if best_n < 0:
-        return {}, ""
-    try:
-        with open(best_path) as f:
-            rec = json.load(f)
-    except (OSError, ValueError):
-        return {}, ""
-    parsed = rec.get("parsed") or {}
-    if parsed.get("sf") != sf:  # only a same-scale record is comparable
-        return {}, ""
-    qs = parsed.get("queries") or {}
-    return (
-        {k: float(v) for k, v in qs.items() if isinstance(v, (int, float))},
-        os.path.basename(best_path),
-    )
-
-
-def _reprobe_child(payload: str) -> int:
-    """Subprocess entrypoint: fresh JVM, warm up, run each named query
-    twice (min-of-2 ≈ the parent's min-of-sweeps estimator: the first
-    run pays whole-stage-codegen compile), print ONE JSON line."""
-    req = json.loads(payload)
-    sf_dir, cpus, names = req["sf_dir"], int(req["cpus"]), req["names"]
-
-    from dataengineeringpipeline_spark.cache import release_caches
-    from dataengineeringpipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="dep-spark-bench-reprobe", cpus=cpus, shuffle_partitions=cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as entrymod
-
-    queries = entrymod.queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.range(cpus).repartition(cpus).mapInPandas(
         _touch_numpy, "id long"
     ).write.mode("overwrite").format("noop").save()
-    calib = _calibrate(spark, cpus)
-    out: dict[str, object] = {"calibration": calib, "timings": {}, "errors": {}}
-    for name in names:
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        best = None
-        # per-query isolation: one mover crashing in the fresh process
-        # (a real regression may present exactly that way) must not
-        # abort the whole reprobe and lose every OTHER mover's
-        # adjudication — the round-9/10 failure mode this exists to fix
-        try:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-                release_caches()
-                spark.catalog.clearCache()
-        except Exception as exc:  # noqa: BLE001 — recorded, never fatal
-            out["errors"][name] = f"{type(exc).__name__}: {exc}"[:200]  # type: ignore[index]
-            if best is None:
-                continue
-        out["timings"][name] = round(best, 3)  # type: ignore[index]
-    print("BENCH_REPROBE_JSON:" + json.dumps(out))
-    return 0
-
-
-def _run_reprobe_subprocess(
-    movers: list[tuple[str, float]], sf_dir: str, cpus: int, timeout_s: float
-) -> tuple[dict[str, float], dict | None, str | None, dict[str, str]]:
-    """Launch the fresh-process reprobe; returns (timings, calibration,
-    error, per-query errors). Never raises — a reprobe failure must not
-    sink the bench."""
-    import subprocess
-
-    payload = json.dumps(
-        {"sf_dir": sf_dir, "cpus": cpus, "names": [n for n, _ in movers]}
-    )
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--reprobe-child", payload],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            timeout=timeout_s,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-    except (OSError, subprocess.TimeoutExpired) as e:
-        return {}, None, f"{type(e).__name__}", {}
-    for line in reversed(proc.stdout.decode("utf-8", "replace").splitlines()):
-        if line.startswith("BENCH_REPROBE_JSON:"):
-            try:
-                out = json.loads(line[len("BENCH_REPROBE_JSON:"):])
-                return (
-                    out.get("timings", {}),
-                    out.get("calibration"),
-                    None,
-                    out.get("errors", {}),
-                )
-            except ValueError:
-                break
-    return {}, None, f"no-json(rc={proc.returncode})", {}
-
-
-def _current_round(repo_dir: str) -> int:
-    """Round number this bench run belongs to: one past the highest
-    committed BENCH_r{NN}.json. Round 12 fix for the round-11 verdict's
-    item 1 — the reprobe adjudication lived only in BENCH_DETAIL.json,
-    which any later ad-hoc run (e.g. the 8-core scaling sweep)
-    overwrites; a per-round detail file makes the adjudication a
-    durable committed artifact. Returns 0 when no record exists."""
-    import glob
-    import re
-
-    best_n = -1
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
-        if m:
-            best_n = max(best_n, int(m.group(1)))
-    return best_n + 1 if best_n >= 0 else 0
-
-
-def _detail_paths(repo_dir: str, detail_path: str, cpus: int) -> list[str]:
-    """Where this run's detail record lands: always the legacy mutable
-    BENCH_DETAIL.json, plus the per-round BENCH_DETAIL_r{NN}.json —
-    UNLESS that file already holds a different-core-count record.
-    Same-round clobber guard: a different-cpus rerun (the driver's
-    lower-core scaling sweep, an ad-hoc probe) must not overwrite the
-    round's main-record reprobe adjudication — the same failure that
-    lost round 11's adjudication, one level down. A rerun at the SAME
-    cpus legitimately replaces (latest closing run wins)."""
-    paths = [detail_path]
-    round_no = _current_round(repo_dir)
-    if round_no:
-        per_round = os.path.join(repo_dir, f"BENCH_DETAIL_r{round_no:02d}.json")
-        try:
-            with open(per_round) as f:
-                if json.load(f).get("cpus") in (None, cpus):
-                    paths.append(per_round)
-        except (OSError, ValueError):
-            paths.append(per_round)  # absent/unreadable: write it
-    return paths
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -299,46 +76,17 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
-
-    # JVM / codegen warm-up (not measured)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # Python-worker warm-up (not measured): mapInPandas queries pay a
-    # per-executor-core python process spawn + numpy import on first
-    # use, and idle workers are reaped between sweeps — without this the
-    # alphabetically-first Arrow query absorbs ~6s of environment
-    # startup as if it were plan cost (measured: 7.97s bench median vs
-    # 2.1s steady state).
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        _touch_numpy, "id long"
-    ).write.mode("overwrite").format("noop").save()
-    _calibrate(spark, cpus)  # untimed: the probes' own codegen compile
-    # (~2s, measured) must not read as regime drift in the first sample
+    _warm_up(spark, cpus)
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "3")))
     budget_s = float(os.environ.get("SPARK_GRAFT_BUDGET_S", "1000"))
     global _STEAL_T0
     _STEAL_T0 = _read_proc_cpu()
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")
-    # Cross-round movers baseline: the prior round's committed driver
-    # record (BENCH_r{N-1}.json parsed.queries) — see module docstring,
-    # round-11 fix (1). BENCH_DETAIL.json is deliberately NOT a
-    # fallback: it may be a same-round same-regime run.
-    prev_minima, prev_source = _prior_round_minima(repo_dir, _sf_from_dir(sf_dir))
     samples: dict[str, list[float]] = {name: [] for name in queries}
-    calibration: list[dict] = []
     t_all = time.perf_counter()
     sweeps = 0
-    for sweep in range(reps):
-        # Re-warm python workers each sweep: executors reap idle workers,
-        # and a full sweep runs >60s of JVM-only queries before the first
-        # Arrow query of the next sweep — without this, that query is
-        # billed ~5s of process spawn + numpy import that is environment
-        # cost, not plan cost (same rationale as the pre-timing warm-up).
-        spark.range(cpus).repartition(cpus).mapInPandas(
-            _touch_numpy, "id long"
-        ).write.mode("overwrite").format("noop").save()
-        calibration.append(_calibrate(spark, cpus))
+    for _sweep in range(reps):
+        _warm_up(spark, cpus)
         for name, fn in sorted(queries.items()):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -354,66 +102,13 @@ def main() -> int:
         sweeps += 1
         if time.perf_counter() - t_all > budget_s:
             break  # the first sweep always completes; extras are budget-gated
-    calibration.append(_calibrate(spark, cpus))  # closing reading
     timings = {name: round(min(s), 3) for name, s in samples.items()}
     total = round(time.perf_counter() - t_all, 3)
 
-    # Re-probe the worst CROSS-ROUND movers in a FRESH SUBPROCESS (own
-    # JVM — the host regime is process-scoped, so an in-process reprobe
-    # inherits whatever regime inflated the recording): a real
-    # regression re-reads at the recorded level; a regime artifact
-    # drops back toward the prior round's reading. Both numbers go in
-    # the record so the adjudication the judge had to run by hand in
-    # rounds 9 AND 10 is in the artifact itself.
-    reprobe: dict[str, dict] = {}
-    reprobe_meta: dict[str, object] = {
-        "baseline": prev_source or None,
-        "fresh_process": True,
-    }
-    movers = sorted(
-        (
-            (name, timings[name] / prev_minima[name])
-            for name in timings
-            if prev_minima.get(name, 0) > 0.3  # sub-noise-floor: skip
-        ),
-        key=lambda kv: -kv[1],
-    )
-    movers = [(n, r) for n, r in movers if r > 1.25][:8]
-    if movers:
-        # the parent session is done measuring (timings + closing
-        # calibration are in hand); stop it BEFORE spawning the child
-        # JVM so peak memory is one warmed JVM, not two
-        spark.stop()
-        child_timings, child_calib, child_err, child_q_errs = (
-            _run_reprobe_subprocess(movers, sf_dir, cpus, timeout_s=420.0)
-        )
-        reprobe_meta["calibration"] = child_calib
-        if child_err:
-            reprobe_meta["error"] = child_err
-        for name, _ratio in movers:
-            entry = {
-                "prev_min": prev_minima[name],
-                "recorded_min": timings[name],
-            }
-            if name in child_timings:
-                entry["reprobe_s"] = child_timings[name]
-            if name in child_q_errs:
-                entry["reprobe_error"] = child_q_errs[name]
-            reprobe[name] = entry
-
-    # The harness that records this bench keeps only the last ~2000
-    # characters of output and json-parses the final line within that
-    # window: a single line carrying all per-query medians is ~2400+
-    # chars and silently fails to parse (observed in two consecutive
-    # recorded rounds). So the FULL detail — every min (the headline
-    # estimator), every median (robust when a run is degraded by
-    # host-level CPU steal: identical code has measured 93s/110s/139s
-    # sum-of-medians purely with ambient steal), and the measured steal
-    # share — is printed first AND written to BENCH_DETAIL.json next to
-    # this script, while the final line is a guaranteed-parsable compact
-    # summary: headline total plus as many per-query minima as fit,
-    # slowest first (the ones a reader acts on), with the count of
-    # elided fast queries.
+    # The recorder of this bench keeps only the last ~2000 characters of
+    # output and parses the final line, so the full detail is printed
+    # first and written to BENCH_DETAIL.json, and the final line is the
+    # compact summary from _head_line.
     detail = {
         "metric": "all_queries_wall",
         "value": total,
@@ -421,54 +116,32 @@ def main() -> int:
         "estimator": "min_of_sweeps",
         "queries": timings,
         "queries_median": {n: round(statistics.median(s), 3) for n, s in samples.items()},
-        # Raw per-sweep samples: the box shows PROCESS-SCOPED fast/slow
-        # regimes (identical mid-suite scenario measured 7.8s and 2.8s
-        # on the md5-heavy dedup family in runs minutes apart, ~0%
-        # steal, no code change) — medians can't distinguish "this run
-        # drew the slow regime" from a real regression, but the raw
-        # samples + cross-round minima can.
         "queries_samples": {n: [round(x, 3) for x in s] for n, s in samples.items()},
         "cpu_steal_pct": _steal_pct(),
         "sf": _sf_from_dir(sf_dir),
         "cpus": cpus,
         "sweeps": sweeps,
-        # Regime instrumentation: per-sweep + closing calibration probe
-        # readings (identical fixed work — drift is host state, not
-        # code) and the fresh-process re-probe of the worst cross-round
-        # movers vs the prior ROUND's committed record (reprobe_s ≈
-        # prev_min ⇒ regime artifact; ≈ recorded_min ⇒ real). An empty
-        # reprobe dict means no query moved >1.25x against the prior
-        # round's record.
-        "calibration": calibration,
-        "reprobe": reprobe,
-        "reprobe_meta": reprobe_meta,
     }
     print(json.dumps(detail))
-    # Written twice: the legacy mutable path (ad-hoc runs keep clobbering
-    # it, by design) AND a per-round file that later ad-hoc runs do NOT
-    # touch — the reprobe adjudication must survive to the committed tree
-    # (round-11 verdict item 1: the r11 adjudication was lost to a later
-    # 8-core run overwriting BENCH_DETAIL.json).
-    paths = _detail_paths(repo_dir, detail_path, cpus)
-    for p in paths:
-        try:
-            with open(p, "w") as f:
-                json.dump(detail, f, indent=1)
-                f.write("\n")
-        except OSError:
-            pass  # read-only checkout: the printed line above still has everything
+    detail_file = "BENCH_DETAIL.json"
+    repo_dir = os.path.dirname(os.path.abspath(__file__))
+    try:
+        with open(os.path.join(repo_dir, detail_file), "w") as f:
+            json.dump(detail, f, indent=1)
+            f.write("\n")
+    except OSError:
+        pass  # read-only checkout: the printed line above still has everything
 
-    print(_head_line(detail, os.path.basename(paths[-1]), prev_source))
+    print(_head_line(detail, detail_file))
     return 0
 
 
-def _head_line(detail: dict, detail_file: str, prev_source: str) -> str:
+def _head_line(detail: dict, detail_file: str) -> str:
     """The bench's final line: a compact summary of ``detail`` that stays
     under the ~2000-character window its recorder parses — headline
     total plus as many per-query minima as fit, slowest first, with the
     count of elided queries."""
     timings = detail["queries"]
-    md5s = [c["md5_s"] for c in detail["calibration"]]
     head = {
         "metric": "all_queries_wall",
         "value": detail["value"],
@@ -477,12 +150,6 @@ def _head_line(detail: dict, detail_file: str, prev_source: str) -> str:
         "sf": detail["sf"],
         "sweeps": detail["sweeps"],
         "cpu_steal_pct": detail["cpu_steal_pct"],
-        # >~1.5 here = the host drew mixed fast/slow regimes during the
-        # run; per-query swings then need BENCH_DETAIL's reprobe block
-        # before being read as regressions
-        "calibration_drift": round(max(md5s) / max(min(md5s), 1e-9), 2),
-        "reprobed_movers": len(detail["reprobe"]),
-        "reprobe_baseline": prev_source or None,
         "queries_total": len(timings),
         "queries_elided": 0,
         "detail": detail_file,
@@ -525,6 +192,4 @@ def _steal_pct() -> float | None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--reprobe-child":
-        sys.exit(_reprobe_child(sys.argv[2]))
     sys.exit(main())

@@ -260,19 +260,8 @@ class Lake:
 
     # -- reads ---------------------------------------------------------------
 
-    def read(
-        self,
-        spark: SparkSession,
-        layer: str,
-        table: str,
-        merge_schema: bool = False,
-    ) -> DataFrame:
-        """Schema-on-read Parquet scan (bronze); declared schema if registered.
-
-        ``merge_schema=True`` reproduces the reference's crawler
-        ``MergeNewColumns`` schema-evolution behavior
-        (``terraform/modules/glue/main.tf:89-101``).
-        """
+    def read(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
+        """Schema-on-read Parquet scan (bronze); declared schema if registered."""
         path = self.path(layer, table)
         sj = _read_schema_json(path)
         if sj is not None:
@@ -282,8 +271,6 @@ class Lake:
             # the added columns as NULL
             return spark.read.schema(_schema_from_json(sj)).parquet(path)
         reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
         ddl = self.schemas.get(f"{layer}.{table}")
         if ddl:
             reader = reader.schema(ddl)
@@ -2745,27 +2732,11 @@ def _cdc_merged_lake(
     shipment changelog (``R`` return flag = tombstone) merged into it.
     ``versioned`` commits a time-travel snapshot before and after the
     merge. Returns ``(lake, merge audit, snapshot versions)``."""
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
-    )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
+    from .scd import _CDC_ORDER_TIEBREAK, _cdc_order_frames
+
+    snapshot, changes = _cdc_order_frames(
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet")),
+        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")),
     )
     lake = Lake(tracked_mkdtemp(prefix), **lake_kw)
     lake.write_clustered(snapshot, "silver", "orders_current", ("order_key",))
@@ -2779,7 +2750,7 @@ def _cdc_merged_lake(
         changes,
         key_col="order_key",
         ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
+        tiebreak_cols=_CDC_ORDER_TIEBREAK,
     )
     if versioned:
         versions.append(lake.snapshot_version("silver", "orders_current"))

@@ -275,7 +275,6 @@ def random_search(
     k: int = 3,
     seed: int = 42,
     feature_cols: list[str] | None = None,
-    halving: bool = True,
 ) -> dict:
     """Seeded random hyperparameter search with successive halving — the
     practical stand-in for the reference's Bayesian tuner
@@ -312,13 +311,10 @@ def random_search(
         )
         return sum(scores) / len(scores)
 
-    if halving:
-        screened = sorted(
-            (score(p, 1), i) for i, p in enumerate(cands)
-        )  # 1-of-k-fold screen: ~k× cheaper per candidate
-        survivors = [cands[i] for _, i in screened[-max(1, n_candidates // 2):]]
-    else:
-        survivors = cands
+    screened = sorted(
+        (score(p, 1), i) for i, p in enumerate(cands)
+    )  # 1-of-k-fold screen: ~k× cheaper per candidate
+    survivors = [cands[i] for _, i in screened[-max(1, n_candidates // 2):]]
     finals = sorted((score(p, None), i) for i, p in enumerate(survivors))
     best_score, best_i = finals[-1]
     return {

@@ -29,7 +29,7 @@ Scale shape (100 TB corpus):
 
 Both reuse :func:`..dedup.doc_shingle_hash_sets` — md5-prefix word
 hashing, bit-reproducible across engines (the DuckDB oracle mirrors it
-verbatim), with the ``fast=True`` xxhash64 toggle for production.
+verbatim).
 """
 
 from __future__ import annotations
@@ -38,8 +38,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataengineeringpipeline_spark.cache import tracked_persist
-from dataengineeringpipeline_spark.operators.dedup import _shingle_arrays, doc_shingle_hash_sets
-from dataengineeringpipeline_spark.operators.text import word_hash
+from dataengineeringpipeline_spark.operators.dedup import (
+    _shingle_hash_arrays_arrow,
+    doc_shingle_hash_sets,
+)
 
 #: Default n-gram width for contamination checks. Public data cards use
 #: 8-13 for natural text; the synthetic fixture corpus draws ~50-word
@@ -53,7 +55,7 @@ BOILERPLATE_MIN_DF = 3
 
 
 def decontaminate(
-    docs: DataFrame, benchmark: DataFrame, n: int = DECONTAM_NGRAM, fast: bool = False
+    docs: DataFrame, benchmark: DataFrame, n: int = DECONTAM_NGRAM
 ) -> DataFrame:
     """Per-document benchmark-overlap report: how many of the document's
     distinct word ``n``-grams also appear anywhere in ``benchmark``.
@@ -67,8 +69,8 @@ def decontaminate(
     The benchmark side is reduced to a DISTINCT hash set and broadcast;
     the corpus side never shuffles before its per-doc aggregation.
     """
-    doc_sets = tracked_persist(doc_shingle_hash_sets(docs, n=n, fast=fast))
-    bench_set = doc_shingle_hash_sets(benchmark, n=n, fast=fast).select("h").distinct()
+    doc_sets = tracked_persist(doc_shingle_hash_sets(docs, n=n))
+    bench_set = doc_shingle_hash_sets(benchmark, n=n).select("h").distinct()
     totals = doc_sets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("total_ngrams"))
     hits = (
         doc_sets.join(F.broadcast(bench_set), "h")
@@ -95,7 +97,7 @@ def decontaminate(
 
 
 def boilerplate_stats(
-    docs: DataFrame, n: int = DECONTAM_NGRAM, min_df: int = BOILERPLATE_MIN_DF, fast: bool = False
+    docs: DataFrame, n: int = DECONTAM_NGRAM, min_df: int = BOILERPLATE_MIN_DF
 ) -> DataFrame:
     """Per-document boilerplate ratio: the fraction of the document's
     distinct ``n``-grams whose corpus document frequency exceeds
@@ -122,18 +124,9 @@ def boilerplate_stats(
     counts equal the exploded-set counts exactly (modulo md5 hash
     collisions, the same assumption the DuckDB oracle makes).
     """
-    # md5 path rides the vectorized Arrow shingle-hash kernel
-    # (dedup._shingle_hash_arrays_arrow, keep_empty: short docs must
-    # report 0 total n-grams, not vanish); xxhash64 stays JVM-native
-    from dataengineeringpipeline_spark.operators.dedup import _shingle_hash_arrays_arrow
-
-    arrays = tracked_persist(
-        _shingle_hash_arrays_arrow(docs, n, keep_empty=True)
-        if not fast
-        else _shingle_arrays(docs, n).select(
-            "doc_id", F.transform("shs", lambda s: word_hash(s, fast=fast)).alias("hs")
-        )
-    )
+    # the vectorized Arrow shingle-hash kernel (keep_empty: short docs
+    # must report 0 total n-grams, not vanish)
+    arrays = tracked_persist(_shingle_hash_arrays_arrow(docs, n, keep_empty=True))
     frequent = (
         arrays.select(F.explode("hs").alias("h"))
         .groupBy("h")

@@ -75,26 +75,26 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def doc_word_hash_sets(docs: DataFrame, fast: bool = False) -> DataFrame:
+def doc_word_hash_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, word_hash) pairs — the distinct word set of each document."""
     w = words_col()
     return (
         spread(docs, "doc_id").select("doc_id", F.explode(F.array_distinct(w)).alias("word"))
-        .select("doc_id", word_hash(F.col("word"), fast=fast).alias("h"))
+        .select("doc_id", word_hash(F.col("word")).alias("h"))
         .distinct()
     )
 
 
-def doc_shingle_hash_sets(docs: DataFrame, n: int = 3, fast: bool = False) -> DataFrame:
+def doc_shingle_hash_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, h) distinct shingle hashes — the standard shingling+hashing
     front end for MinHash/SimHash. Shingles are selective even on small
     vocabularies (word *sets* are not — see :func:`word_jaccard_pairs`).
 
     Derived from :func:`doc_shingle_hash_arrays` (one explode): rows are
     identical to hashing the exploded shingles directly — the array form
-    is the same first-occurrence-distinct shingle list — and the md5
-    path rides the arrays' vectorized Arrow kernel."""
-    return doc_shingle_hash_arrays(docs, n, fast=fast).select(
+    is the same first-occurrence-distinct shingle list — and it rides
+    the arrays' vectorized Arrow kernel."""
+    return doc_shingle_hash_arrays(docs, n).select(
         "doc_id", F.explode("hs").alias("h")
     )
 
@@ -127,16 +127,15 @@ def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return _shingle_arrays(docs, n).select("doc_id", F.explode("shs").alias("shingle"))
 
 
-def doc_shingle_hash_arrays(docs: DataFrame, n: int = 3, fast: bool = False) -> DataFrame:
+def doc_shingle_hash_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, hs) — each document's shingle-hash array, **map-only**
     (no explode, no shuffle): the scale-path front end for MinHash.
     Documents with no shingles (< ``n`` words) are dropped, matching the
     exploded form's implicit absence from any ``groupBy(doc_id)``.
 
-    The md5 path (``fast=False``) runs as ONE ``mapInArrow`` batch
-    kernel — tokenize, shingle, first-occurrence-distinct and the
-    md5-prefix hash in a single Python pass over Arrow batches of just
-    ``(doc_id, text)`` (guide §4.2: hand whole batches to native code;
+    It runs as ONE ``mapInArrow`` batch kernel — tokenize, shingle,
+    first-occurrence-distinct and the md5-prefix hash in a single
+    Python pass over Arrow batches of just ``(doc_id, text)`` (guide §4.2: hand whole batches to native code;
     §2.3: project before the opaque op so the scan ships two columns).
     Bits are pinned to the JVM expression chain — Java-regex ``\\s``
     whitespace classes, space-only ``trim``, keep-trailing-empties
@@ -146,24 +145,14 @@ def doc_shingle_hash_arrays(docs: DataFrame, n: int = 3, fast: bool = False) -> 
     sf0.1, 6 regime draws): 1.34-2.11x faster than the JVM chain, and
     immune to the host's slow-md5-regime draws that inflated the family
     2-4x in rounds 9-11 (Python kernel 0.54-1.41s where the JVM chain
-    read 0.86-2.97s for identical work). ``fast=True`` (xxhash64) stays
-    on the JVM expression path — it is hash-native there and crosses no
-    Python boundary."""
-    if fast:
-        return (
-            _shingle_arrays(docs, n)
-            .filter(F.size("shs") > 0)
-            .select(
-                "doc_id", F.transform("shs", lambda s: word_hash(s, fast=True)).alias("hs")
-            )
-        )
+    read 0.86-2.97s for identical work)."""
     return _shingle_hash_arrays_arrow(docs, n)
 
 
 def _shingle_hash_arrays_arrow(
     docs: DataFrame, n: int, keep_empty: bool = False
 ) -> DataFrame:
-    """mapInArrow body of :func:`doc_shingle_hash_arrays` (md5 path).
+    """mapInArrow body of :func:`doc_shingle_hash_arrays`.
 
     Semantics replicated bit-for-bit from the JVM chain:
 
@@ -1011,7 +1000,6 @@ def duplicate_span_coverage(
     docs: DataFrame,
     window: int = SPAN_WINDOW,
     stride: int = SPAN_STRIDE,
-    fast: bool = False,
 ) -> DataFrame:
     """Substring-level exact dedup: per-document coverage by character
     spans that occur (verbatim) more than once anywhere in the corpus.
@@ -1067,7 +1055,7 @@ def duplicate_span_coverage(
             "doc_chars",
             "ps",
             F.transform(
-                "ps", lambda p: word_hash(F.substr("text", p, F.lit(window)), fast=fast)
+                "ps", lambda p: word_hash(F.substr("text", p, F.lit(window)))
             ).alias("whs"),
         )
     )
@@ -1122,7 +1110,6 @@ def remove_duplicate_spans(
     docs: DataFrame,
     window: int = SPAN_WINDOW,
     stride: int = SPAN_STRIDE,
-    fast: bool = False,
 ) -> DataFrame:
     """Apply substring dedup: delete every character covered by a
     corpus-repeated span and return the cleaned text — the *removal*
@@ -1165,7 +1152,7 @@ def remove_duplicate_spans(
             "doc_chars",
             "text",
             F.transform(
-                "ps", lambda p: word_hash(F.substr("text", p, F.lit(window)), fast=fast)
+                "ps", lambda p: word_hash(F.substr("text", p, F.lit(window)))
             ).alias("whs"),
             "ps",
         )
@@ -1253,7 +1240,6 @@ def shared_span_pairs(
     stride: int = SPAN_STRIDE,
     min_windows: int = 2,
     max_df: int = SPAN_PAIR_MAX_DF,
-    fast: bool = False,
 ) -> DataFrame:
     """Cross-document verbatim-span pairs: which document pairs share
     exact ``window``-char substrings, and how many.
@@ -1298,9 +1284,7 @@ def shared_span_pairs(
                     "ps",
                     lambda p: F.struct(
                         p.alias("pos"),
-                        word_hash(F.substr("text", p, F.lit(window)), fast=fast).alias(
-                            "h"
-                        ),
+                        word_hash(F.substr("text", p, F.lit(window))).alias("h"),
                     ),
                 )
             ).alias("z"),

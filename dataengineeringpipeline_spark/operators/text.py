@@ -6,10 +6,6 @@ whole pipeline stays inside WholeStageCodegen and scales linearly with
 executors. Word hashing uses md5-prefix parsing (``conv(substr(md5(w),
 1,12),16,10)``) which is deterministic across engines and runs — the
 foundation for the oracle-checkable MinHash/SimHash in :mod:`dedup`.
-
-At 100 TB the md5 word hash is ~2× slower than ``xxhash64``; swap via
-``word_hash(col, fast=True)`` when cross-engine reproducibility isn't
-required (the operator semantics are identical).
 """
 
 from __future__ import annotations
@@ -36,14 +32,9 @@ def words_col(text: str | Column = "text") -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-def word_hash(word: Column, fast: bool = False) -> Column:
-    """Deterministic 48-bit word hash.
-
-    ``fast=False``: md5-prefix parse — bit-identical in any engine (oracle
-    mode). ``fast=True``: ``xxhash64`` — JVM-native, for production scale.
-    """
-    if fast:
-        return F.xxhash64(word)
+def word_hash(word: Column) -> Column:
+    """Deterministic 48-bit word hash: the md5-prefix parse, bit-identical
+    in any engine (the oracle recomputes it)."""
     return F.conv(F.substring(F.md5(word), 1, 12), 16, 10).cast("long")
 
 

@@ -482,9 +482,7 @@ BLOOM_K = 4
 def _bloom_positions(key: Column, m: int, k: int) -> Column:
     """Array of ``k`` bit positions for a key — each probe is the
     engine-portable 48-bit md5-prefix hash of ``"j:<key>"`` mod ``m``
-    (pure integer, so the DuckDB oracle reproduces the bitmap exactly;
-    swap ``word_hash(fast=True)``/xxhash64 in at production scale as the
-    dedup family documents)."""
+    (pure integer, so the DuckDB oracle reproduces the bitmap exactly)."""
     from dataengineeringpipeline_spark.operators.text import word_hash
 
     return F.array(

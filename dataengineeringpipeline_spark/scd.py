@@ -181,19 +181,20 @@ def cdc_apply(
     return untouched.unionByName(survivors)
 
 
-def cdc_order_snapshot(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """Driver-contract query: CDC-apply a shipment changelog to an order
-    snapshot. The snapshot is pre-1999 orders (key, status, price, last
-    change date); the changelog is the 2001+ shipment tail of lineitem,
-    each shipment upserting its order (status ``SHIPPED-<linestatus>``,
-    price re-quoted to the line's extended price) and returned lines
-    (``l_returnflag = 'R'``) tombstoning it. Latest shipment per order
-    wins; the tiebreak chain extends through every payload column
-    because the synthetic data carries duplicate (order, ship date,
-    line number) rows with different payloads — ROW_NUMBER over a
-    non-total order is the classic cross-engine nondeterminism, caught
-    by the sf0.1 hostile probe. With the full chain, remaining ties are
-    bit-identical rows, so the winner is value-unique — deterministic."""
+#: Tiebreak chain of the order CDC fixture, through every payload column
+#: (see :func:`cdc_order_snapshot`).
+_CDC_ORDER_TIEBREAK = ("line_number", "op", "status", "total_price")
+
+
+def _cdc_order_frames(
+    orders: DataFrame, lineitem: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The order CDC fixture shared by the batch, lake and streaming CDC
+    queries: ``(snapshot, changes)``. The snapshot is pre-1999 orders
+    (key, status, price, last change date); the changelog is the 2001+
+    shipment tail of lineitem, each shipment upserting its order (op
+    ``U``) and returned lines (``l_returnflag = 'R'``) tombstoning it
+    (op ``D``)."""
     snapshot = orders.filter(
         F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
     ).select(
@@ -214,13 +215,28 @@ def cdc_order_snapshot(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
         F.col("l_shipdate").cast("date").alias("last_change"),
         F.col("l_linenumber").alias("line_number"),
     )
+    return snapshot, changes
+
+
+def cdc_order_snapshot(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """Driver-contract query: CDC-apply a shipment changelog to an order
+    snapshot (:func:`_cdc_order_frames`): each shipment upserts its order
+    (status ``SHIPPED-<linestatus>``, price re-quoted to the line's
+    extended price) and returned lines tombstone it. Latest shipment per
+    order wins; the tiebreak chain extends through every payload column
+    because the synthetic data carries duplicate (order, ship date,
+    line number) rows with different payloads — ROW_NUMBER over a
+    non-total order is the classic cross-engine nondeterminism, caught
+    by the sf0.1 hostile probe. With the full chain, remaining ties are
+    bit-identical rows, so the winner is value-unique — deterministic."""
+    snapshot, changes = _cdc_order_frames(orders, lineitem)
     return cdc_apply(
         snapshot,
         changes,
         key_cols=["order_key"],
         ts_col="last_change",
         op_col="op",
-        tiebreak_cols=["line_number", "op", "status", "total_price"],
+        tiebreak_cols=list(_CDC_ORDER_TIEBREAK),
     ).orderBy("order_key")
 
 

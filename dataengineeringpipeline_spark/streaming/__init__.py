@@ -720,7 +720,6 @@ def streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_stream(
     events: DataFrame,
     gap_minutes: int = DEFAULT_SESSION_GAP_MINUTES,
-    evict_idle_state: bool = False,
 ) -> DataFrame:
     """Custom stateful operator: per-user gap-based session counting via
     ``applyInPandasWithState``.
@@ -729,11 +728,10 @@ def sessionize_stream(
     sorts its rows by event time, splits on > ``gap`` idle, and carries
     the boundary across batches through the state store.
 
-    ``evict_idle_state=True`` registers a processing-time timeout that
-    evicts idle users' state — use it for an *always-on* stream (bounded
-    memory). Leave it off for ``availableNow`` backlog drains: a
-    registered timeout keeps the query scheduling empty batches to
-    service future timeouts, so the drain never terminates.
+    No state timeout is registered: one would keep an ``availableNow``
+    backlog drain scheduling empty batches to service future timeouts,
+    so the drain would never terminate. An always-on stream that needs
+    bounded state uses :func:`sessionize_stream_event_time`.
     """
     import pandas as pd
 
@@ -742,12 +740,6 @@ def sessionize_stream(
     def update(
         key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
     ) -> Iterator["pd.DataFrame"]:
-        if state.hasTimedOut:
-            # idle eviction: drop the state, emit nothing — re-arming here
-            # would keep every idle user's state (and a spurious output
-            # row) alive forever.
-            state.remove()
-            return
         import numpy as np
 
         last_ts, sessions, events_n = state.get if state.exists else (None, 0, 0)
@@ -767,8 +759,6 @@ def sessionize_stream(
             last_ts = int(ts[-1])
             events_n += len(ts)
         state.update((last_ts, sessions, events_n))
-        if evict_idle_state:
-            state.setTimeoutDuration(3_600_000)
         yield pd.DataFrame(
             {"user_id": [key[0]], "sessions": [sessions], "events_seen": [events_n]}
         )
@@ -778,11 +768,7 @@ def sessionize_stream(
         outputStructType="user_id bigint, sessions bigint, events_seen bigint",
         stateStructType="last_ts bigint, sessions bigint, events_seen bigint",
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if evict_idle_state
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -794,9 +780,9 @@ def sessionize_stream_event_time(
 ) -> DataFrame:
     """Always-on sessionization with EVENT-TIME state eviction: a user
     idle for ``state_ttl_minutes`` of *event* time (watermark-driven, so
-    it is replay-deterministic — unlike the processing-time variant in
-    :func:`sessionize_stream`, a backfill at full speed evicts exactly
-    the same users a live run would) has their state dropped. Bounded
+    it is replay-deterministic — a backfill at full speed evicts exactly
+    the same users a live run would, where a processing-time timeout
+    would not) has their state dropped. Bounded
     state is what keeps an always-on stream alive at 100 TB/day; the
     documented trade is that a user returning after the TTL starts a
     fresh count.
@@ -1910,27 +1896,11 @@ def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream. Because the latest-change merge is associative, the drained
     snapshot is bit-identical to the batch apply, and the oracle is the
     batch arithmetic."""
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
-    )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
+    from ..scd import _CDC_ORDER_TIEBREAK, _cdc_order_frames
+
+    snapshot, changes = _cdc_order_frames(
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet")),
+        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")),
     )
     tmp = _bootstrap("stream_cdc_", None, changes, F.expr("order_key % 3"))
     ddl = (
@@ -1945,7 +1915,7 @@ def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         ddl,
         key_cols=("order_key",),
         ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
+        tiebreak_cols=_CDC_ORDER_TIEBREAK,
     )
     return read_cdc_snapshot(
         spark,
@@ -1953,7 +1923,7 @@ def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{tmp}/state",
         key_cols=("order_key",),
         ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
+        tiebreak_cols=_CDC_ORDER_TIEBREAK,
     ).orderBy("order_key")
 
 
@@ -2337,28 +2307,11 @@ def streaming_lake_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the single-batch lake merge and the oracle is the
     shared batch-apply arithmetic."""
     from ..datalake import Lake
+    from ..scd import _CDC_ORDER_TIEBREAK, _cdc_order_frames
 
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    snapshot = orders.filter(
-        F.col("o_orderdate").cast("date") < F.lit("1999-01-01").cast("date")
-    ).select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total_price"),
-        F.col("o_orderdate").cast("date").alias("last_change"),
-    )
-    changes = lineitem.filter(
-        F.col("l_shipdate").cast("date") >= F.lit("2001-01-01").cast("date")
-    ).select(
-        F.col("l_orderkey").alias("order_key"),
-        F.when(F.col("l_returnflag") == "R", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("SHIPPED-"), F.col("l_linestatus")).alias("status"),
-        F.col("l_extendedprice").alias("total_price"),
-        F.col("l_shipdate").cast("date").alias("last_change"),
-        F.col("l_linenumber").alias("line_number"),
+    snapshot, changes = _cdc_order_frames(
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet")),
+        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")),
     )
     tmp = _bootstrap(
         "stream_cdc_merge_boot_",
@@ -2383,7 +2336,7 @@ def streaming_lake_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         ddl,
         key_col="order_key",
         ts_col="last_change",
-        tiebreak_cols=("line_number", "op", "status", "total_price"),
+        tiebreak_cols=_CDC_ORDER_TIEBREAK,
         max_files_per_trigger=1,
     )
     return (

@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dataengineeringpipeline_spark.session import get_spark  # noqa: E402
+from dataengineeringpipeline_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 #: Small sf for fast unit runs; override for the full oracle gate:
 #:   SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/
@@ -61,7 +61,6 @@ _SLOW_TIER = {
     "test_streaming.py::test_stream_incremental_dedup_covers_every_arrival_once",
     "test_streaming.py::test_stream_rule_summary_refresh_converges",
     "test_streaming.py::test_stream_cdc_merge_snapshot_each_batch_bounded",
-    "test_bench_harness.py::test_reprobe_child_runs_in_fresh_process",
     "test_properties.py::test_cdc_apply_matches_python_model_and_is_idempotent",
     "test_properties.py::test_merge_scd2_equals_logical_apply_for_any_batch",
     "test_properties.py::test_bloom_matches_python_model_and_never_drops_members",
@@ -124,7 +123,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="dep-spark-tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark(
+        app_name="dep-spark-tests", cpus=DEFAULT_CPUS, shuffle_partitions=DEFAULT_CPUS
+    )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
 

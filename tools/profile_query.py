@@ -39,20 +39,11 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
+    import bench
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[name]
-    # warm-up (JVM + python workers), matching bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _touch_numpy(batches):
-        import numpy  # noqa: F401
-
-        yield from batches
-
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        _touch_numpy, "id long"
-    ).write.mode("overwrite").format("noop").save()
+    bench._warm_up(spark, cpus)  # the bench's own untimed warm-up
 
     for rep in range(reps):
         jobs_before = {j["jobId"] for j in _rest(ui, f"applications/{app_id}/jobs")}

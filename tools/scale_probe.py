@@ -38,18 +38,12 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        bench._touch_numpy, "id long"
-    ).write.mode("overwrite").format("noop").save()
-    bench._calibrate(spark, cpus)  # codegen compile, untimed
-    calib = bench._calibrate(spark, cpus)
+    bench._warm_up(spark, cpus)
 
     out: dict[str, object] = {
         "metric": "scale_probe",
         "sf_dir": sf_dir,
         "cpus": cpus,
-        "calibration": calib,
         "timings": {},
         "errors": {},
     }
